@@ -71,7 +71,7 @@ object GraftFunctions {
     // unchanged — use [[spread]] for those.
     val parts =
       try df.queryExecution.sparkPlan.execute().getNumPartitions
-      catch { case _: Throwable => target }
+      catch { case scala.util.control.NonFatal(_) => target }
     if (parts < target) df.repartition(target) else df
   }
 

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.expr.BloomBitsetAgg
 import graft.functions.GraftFunctions.bloomBits
+import graft.sources.TableResolver
 
 /**
  * File-level Bloom data-skipping index: one bloom bitset per parquet FILE
@@ -34,7 +35,7 @@ object BloomIndex {
     * and the shuffle moves |files| buffers, not rows. */
   def buildIndex(spark: SparkSession, tableDir: String, column: String,
       mBits: Int = 1 << 17, numHashes: Int = 5): DataFrame = {
-    val t = spark.read.parquet(tableDir)
+    val t = TableResolver.open(spark, tableDir)
     t.select(col("_metadata.file_path").as("file"),
         xxhash64(col(column)).as("__h"))
       .groupBy(col("file"))
@@ -56,7 +57,7 @@ object BloomIndex {
   def updateIndex(spark: SparkSession, tableDir: String, column: String,
       indexPath: String, mBits: Int = 1 << 17, numHashes: Int = 5): Long = {
     def norm(s: String) = new org.apache.hadoop.fs.Path(s).toUri.getPath
-    val existing = spark.read.parquet(indexPath)
+    val existing = TableResolver.open(spark, indexPath)
     val head = existing.select("m_bits", "num_hashes").head()
     require(head.getInt(0) == mBits && head.getInt(1) == numHashes,
       s"sidecar geometry ${head.getInt(0)}/${head.getInt(1)} != $mBits/$numHashes")
@@ -95,7 +96,7 @@ object BloomIndex {
     * same xxhash64, same input type (cast to the column's type first). */
   def probeHash(spark: SparkSession, tableDir: String, column: String,
       value: Any): Long = {
-    val dt = spark.read.parquet(tableDir).schema(column).dataType
+    val dt = TableResolver.open(spark, tableDir).schema(column).dataType
     spark.range(1).select(xxhash64(lit(value).cast(dt))).head().getLong(0)
   }
 
@@ -104,7 +105,7 @@ object BloomIndex {
   def lookup(spark: SparkSession, tableDir: String, idx: DataFrame,
       column: String, value: Any): DataFrame = {
     val files = candidateFiles(spark, idx, probeHash(spark, tableDir, column, value))
-    val base = spark.read.parquet(tableDir)
+    val base = TableResolver.open(spark, tableDir)
     if (files.isEmpty) base.where(lit(false))
     else spark.read.schema(base.schema).parquet(files: _*)
       .where(col(column) === lit(value).cast(base.schema(column).dataType))

@@ -1245,7 +1245,7 @@ object DistDrift {
     * count, so the choice is data-driven, not a config. 4M rows of
     * (long v, long r2x) ≈ 64 MB framed — inside the broadcast comfort
     * zone; above it the value-keyed shuffle join is the scale shape. */
-  private val BroadcastValueLimit = 4000000L
+  private[operators] val BroadcastValueLimit = 4000000L
 
   private[operators] def rankSums(subj: DataFrame): (Array[(String, Long, Long)], Long) = {
     // cells cached (not perValue): every downstream job — bucket stats,

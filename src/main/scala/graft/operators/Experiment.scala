@@ -1957,7 +1957,7 @@ object Experiment {
     val ranked = info.df
       .select(col("rt"), col("__v0").as("v"),
         (lit(2L) * col("c_below") + col("c") + lit(1L)).as("__r2"))
-    val rankedSide = if (info.nDistinct <= 4000000L) broadcast(ranked)
+    val rankedSide = if (info.nDistinct <= DistDrift.BroadcastValueLimit) broadcast(ranked)
       else ranked
     val perItem = r.join(rankedSide, Seq("rt", "v"))
       .groupBy(col("it")).agg(sum(col("__r2")).as("r2"))

@@ -138,7 +138,7 @@ object Outliers {
     val dev = pv.select(abs(col("v") - lit(med)).as("v"), col("c"))
       .groupBy(col("v")).agg(sum(col("c")).as("c"))
     val mad = medianOf(dev,
-      (0.0, math.max(math.abs(vMin - med), math.abs(vMax - med)).toDouble))
+      (0.0, math.max(math.abs(vMin.toDouble - med), math.abs(vMax.toDouble - med))))
     val spark = df.sparkSession
     import spark.implicits._
     val plainMean = sAll.doubleValue / n.toDouble

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.TableResolver
+
 /**
  * Persisted secondary index: (value, pk) pairs RANGE-SORTED on the value
  * and written with a per-file min/max sidecar — the shared-nothing
@@ -26,13 +28,13 @@ object SecondaryIndex {
     * envelopes), plus the `<indexPath>_stats` min/max sidecar. */
   def build(spark: SparkSession, tableDir: String, column: String,
       pkCol: String, indexPath: String, nFiles: Int = 8): Unit = {
-    spark.read.parquet(tableDir)
+    TableResolver.open(spark, tableDir)
       .select(col(column).as("v"), col(pkCol).as("pk"))
       .where(col("v").isNotNull)
       .repartitionByRange(nFiles, col("v"))
       .sortWithinPartitions("v")
       .write.mode("overwrite").parquet(indexPath)
-    spark.read.parquet(indexPath)
+    TableResolver.open(spark, indexPath)
       .groupBy(col("_metadata.file_path").as("file"))
       .agg(min(col("v")).as("v_min"), max(col("v")).as("v_max"))
       .write.mode("overwrite").parquet(indexPath + "_stats")
@@ -54,7 +56,7 @@ object SecondaryIndex {
       .where(col("v").isNotNull)
     if (requireNewPks) {
       val dup = add.select("pk")
-        .join(spark.read.parquet(indexPath).select("pk"), Seq("pk"), "left_semi")
+        .join(TableResolver.open(spark, indexPath).select("pk"), Seq("pk"), "left_semi")
         .limit(1).collect()
       require(dup.isEmpty,
         s"pk ${dup.headOption.map(_.get(0))} already indexed at $indexPath")
@@ -79,7 +81,7 @@ object SecondaryIndex {
   /** Index files whose [min,max] intersects [lo, hi] — |files|-bounded. */
   private def candidateFiles(spark: SparkSession, indexPath: String,
       lo: Column, hi: Column): Seq[String] =
-    spark.read.parquet(indexPath + "_stats")
+    TableResolver.open(spark, indexPath + "_stats")
       .where(col("v_max") >= lo && col("v_min") <= hi)
       .select("file").collect().map(_.getString(0)).toSeq
 
@@ -88,13 +90,13 @@ object SecondaryIndex {
     * index files + the PK-matched base rows. */
   def lookupRange(spark: SparkSession, tableDir: String, indexPath: String,
       column: String, pkCol: String, lo: Any, hi: Any): DataFrame = {
-    val base = spark.read.parquet(tableDir)
+    val base = TableResolver.open(spark, tableDir)
     val dt = base.schema(column).dataType
     val (l, h) = (lit(lo).cast(dt), lit(hi).cast(dt))
     val files = candidateFiles(spark, indexPath, l, h)
     if (files.isEmpty) return base.where(lit(false))
     val idx = spark.read.schema(
-        spark.read.parquet(indexPath).schema)
+        TableResolver.open(spark, indexPath).schema)
       .parquet(files: _*)
       .where(col("v") >= l && col("v") <= h)
       .select(col("pk").as(pkCol)).distinct()
@@ -105,7 +107,7 @@ object SecondaryIndex {
   /** (files_total, files_scanned) for a probe range. */
   def pruneStats(spark: SparkSession, indexPath: String, column: String,
       lo: Any, hi: Any): (Long, Long) = {
-    val stats = spark.read.parquet(indexPath + "_stats")
+    val stats = TableResolver.open(spark, indexPath + "_stats")
     (stats.count(),
       stats.where(col("v_max") >= lit(lo) && col("v_min") <= lit(hi)).count())
   }

@@ -8,6 +8,8 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 
+import graft.sources.TableResolver
+
 /**
  * Materialized-view aggregate rewrite — the classic warehouse
  * acceleration: a query that re-aggregates a base table over a SUBSET of
@@ -57,7 +59,7 @@ object MaterializedViews {
   def create(spark: SparkSession, basePath: String, mvPath: String,
       dims: Seq[String], aggSpecs: Seq[(String, String)]): MvDef = {
     require(dims.nonEmpty && aggSpecs.nonEmpty, "dims and aggs must be non-empty")
-    val base = spark.read.parquet(basePath)
+    val base = TableResolver.open(spark, basePath)
     val cols = aggSpecs.map {
       case ("sum", c)   => sum(col(c)).as(s"mv_sum_$c")
       case ("min", c)   => min(col(c)).as(s"mv_min_$c")
@@ -191,7 +193,7 @@ object MaterializedViews {
       sumCols: Seq[String]): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     cdcStream.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
       val spark = batch.sparkSession
-      val next = applyCdc(spark.read.parquet(mvPath), batch, dims, sumCols)
+      val next = applyCdc(TableResolver.open(spark, mvPath), batch, dims, sumCols)
       swapPublish(next, mvPath)
     }
 
@@ -299,7 +301,7 @@ object MvAggregateRewrite extends Rule[LogicalPlan] {
 
   private def rewrite(agg: Aggregate, mv: MaterializedViews.MvDef): Option[LogicalPlan] = {
     val spark = SparkSession.active
-    val mvPlan = spark.read.parquet(mv.mvPath).queryExecution.analyzed
+    val mvPlan = TableResolver.open(spark, mv.mvPath).queryExecution.analyzed
     val mvAttr = mvPlan.output.map(a => a.name -> a).toMap
     val ges2 = agg.groupingExpressions.map {
       case a: Attribute if mv.dims.contains(a.name) => Some(mvAttr(a.name))

@@ -241,8 +241,9 @@ final case class QueryBuilder(
   /** Output column names after joins: un-conflicted fields flatten to the
     * bare name; conflicted keep the `table.field` prefix
     * (reference query_builder.dart:705-823). Lazy: `bt` consults this per
-    * column reference, and each evaluation would otherwise re-read every
-    * table's parquet footer. */
+    * column reference, and each evaluation would otherwise reopen every
+    * joined table (a file listing and a new relation per table; the
+    * session's TableResolver keeps the reopen itself free of Spark jobs). */
   private lazy val flattenNames: Seq[(String, String)] = { // (qualifiedRef, outputName)
     val perTable: Seq[(String, Seq[String])] =
       ((table, table) +: joins.map(j => (j.name, j.table))).distinct

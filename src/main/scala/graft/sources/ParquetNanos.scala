@@ -55,10 +55,13 @@ object ParquetNanos {
     * (event-time windows, watermarks, keyset cursors) sees one
     * timestamp type regardless of how the producer annotated the file.
     * The session runs in UTC, so the cast is value-identical.
+    *
+    * The raw schema and the nanos column list come from the session's
+    * [[TableResolver]], so reopening an unchanged table launches no job.
     */
   def read(spark: SparkSession, path: String): DataFrame = {
-    val df = spark.read.parquet(path)
-    val converted = nanosColumns(spark, path).foldLeft(df) { (acc, c) =>
+    val (df, nanos) = TableResolver.openWithNanos(spark, path)
+    val converted = nanos.foldLeft(df) { (acc, c) =>
       acc.withColumn(c, timestamp_micros(expr(s"`$c` div 1000")))
     }
     converted.schema.fields.collect {

@@ -22,35 +22,9 @@ import org.apache.spark.sql.types.TimestampType
   */
 class NanosPushdownSpec extends SparkSpec {
 
-  private val cut = "2024-01-10 00:00:00"
-  private val cutNanos = java.sql.Timestamp.valueOf(cut).getTime * 1000000L
+  import NanosPushdownSpec._
 
-  /** Temp table dir holding a single-file events.parquet with
-    * required int64 event_id + required TIMESTAMP(NANOS) ts.
-    * Rows straddle the cut, including sub-microsecond offsets
-    * (+1ns, +999ns, +1000ns) that only exact integer bounds keep. */
-  private lazy val nanosDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-nanos").toFile
-    dir.deleteOnExit()
-    val schema = Types.buildMessage()
-      .required(PrimitiveTypeName.INT64).named("event_id")
-      .required(PrimitiveTypeName.INT64)
-      .as(LogicalTypeAnnotation.timestampType(false, LogicalTypeAnnotation.TimeUnit.NANOS))
-      .named("ts")
-      .named("events")
-    val writer = ExampleParquetWriter.builder(new Path(s"$dir/events.parquet"))
-      .withConf(new Configuration()).withType(schema).build()
-    val offsets = Seq(-3600L * 1000000000L, -1000L, -1L, 0L, 1L, 999L, 1000L,
-      3600L * 1000000000L)
-    offsets.zipWithIndex.foreach { case (off, i) =>
-      val g = new SimpleGroup(schema)
-      g.add("event_id", i.toLong)
-      g.add("ts", cutNanos + off)
-      writer.write(g)
-    }
-    writer.close()
-    dir.toString
-  }
+  private lazy val nanosDir: String = writeFixture()
 
   private lazy val nanosEngine = Graft(spark, nanosDir)
 
@@ -93,5 +67,38 @@ class NanosPushdownSpec extends SparkSpec {
     // equality on the cut micro matches every row inside its 1000-nanos
     // bucket: offsets +0, +1, +999 (but not +1000, the next bucket)
     assert(nanosEngine.table("events").where(expr(s"ts = TIMESTAMP '$cut'")).count() == 3L)
+  }
+}
+
+object NanosPushdownSpec {
+
+  val cut = "2024-01-10 00:00:00"
+  val cutNanos = java.sql.Timestamp.valueOf(cut).getTime * 1000000L
+
+  /** Temp table dir holding a single-file events.parquet with
+    * required int64 event_id + required TIMESTAMP(NANOS) ts.
+    * Rows straddle the cut, including sub-microsecond offsets
+    * (+1ns, +999ns, +1000ns) that only exact integer bounds keep. */
+  def writeFixture(): String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-nanos").toFile
+    dir.deleteOnExit()
+    val schema = Types.buildMessage()
+      .required(PrimitiveTypeName.INT64).named("event_id")
+      .required(PrimitiveTypeName.INT64)
+      .as(LogicalTypeAnnotation.timestampType(false, LogicalTypeAnnotation.TimeUnit.NANOS))
+      .named("ts")
+      .named("events")
+    val writer = ExampleParquetWriter.builder(new Path(s"$dir/events.parquet"))
+      .withConf(new Configuration()).withType(schema).build()
+    val offsets = Seq(-3600L * 1000000000L, -1000L, -1L, 0L, 1L, 999L, 1000L,
+      3600L * 1000000000L)
+    offsets.zipWithIndex.foreach { case (off, i) =>
+      val g = new SimpleGroup(schema)
+      g.add("event_id", i.toLong)
+      g.add("ts", cutNanos + off)
+      writer.write(g)
+    }
+    writer.close()
+    dir.toString
   }
 }
