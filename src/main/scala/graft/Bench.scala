@@ -204,21 +204,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(graft.plans.GraftExtensions.install)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // codegen class cache: the default 100 entries thrashes under a
-      // 405-query suite (every query recompiles its generated code each
-      // pass — janino compilation, not query work); any production
-      // deployment with a diverse query mix raises this the same way.
-      // Static conf: must be set at FIRST session build.
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.localSession("graft-bench")
     // JVM/codegen warm-up so the alphabetically-first query doesn't absorb
     // one-time JIT + classloading cost (~5 s) into its measurement
     spark.range(100000).selectExpr("sum(id)").write.format("noop").mode("overwrite").save()

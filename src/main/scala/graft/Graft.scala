@@ -1316,9 +1316,15 @@ object Graft {
     e
   }
 
-  /** Local session tuned per the build notes: 32 threads, 32 shuffle
-    * partitions (not 200), AQE on for runtime re-planning/skew handling. */
-  def localSession(appName: String = "graft", cores: Int = 32): SparkSession = {
+  /** The one session builder every graft entry point (bench, oracle
+    * gate, rehearsals, plan tools, tests) goes through: `local[cores]`
+    * with `cores` shuffle partitions (not 200), AQE on for runtime
+    * re-planning/skew handling, the graft planner extensions, parquet
+    * nanos read as longs, and a UTC session clock. `cores` defaults to
+    * `SPARK_GRAFT_CPUS`, 32 when unset. */
+  def localSession(appName: String = "graft",
+      cores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt).getOrElse(32))
+      : SparkSession = {
     val s = SparkSession.builder()
       .withExtensions(graft.plans.GraftExtensions.install)
       .master(s"local[$cores]")

@@ -20,7 +20,6 @@ object JobProfile {
     require(args.length == 2, "usage: JobProfile <sfDir> <q1,q2,...>")
     val Array(dir, names) = args
     val spark = Graft.localSession("job-profile")
-    spark.sparkContext.setLogLevel("WARN")
     // warm-up: JIT + codegen + parquet footer caches
     spark.range(100000).selectExpr("sum(id)")
       .write.format("noop").mode("overwrite").save()

@@ -28,23 +28,7 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(graft.plans.GraftExtensions.install)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // codegen class cache: the default 100 entries thrashes under a
-      // 405-query suite (every query recompiles its generated code each
-      // pass — janino compilation, not query work); any production
-      // deployment with a diverse query mix raises this the same way.
-      // Static conf: must be set at FIRST session build.
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.localSession("graft-verify")
     new java.io.File(outDir).mkdirs()
     val par = sys.env.get("SPARK_GRAFT_VERIFY_PAR").map(_.toInt)
       .getOrElse(4).max(1)

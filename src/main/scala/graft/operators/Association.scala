@@ -25,6 +25,26 @@ import org.apache.spark.sql.functions._
  */
 object Association {
 
+  /** The items-per-basket contract and the basket count in ONE probe
+    * over the cached (basket, item) table `bi`, grouped by `keys`. It is
+    * a full aggregation, not a limit(1) probe: limit short-circuits
+    * partitions, leaving the cache part-cold, so the basket count and the
+    * first pair join would each re-run the upstream join+distinct
+    * (measured: three ~10-task-second stages per q207 run). The densest
+    * basket's key rides the same aggregation via `max_by`, so a violation
+    * names it. Returns the number of baskets. */
+  private def guardOccupancy(bi: DataFrame, keys: Seq[String],
+      maxItemsPerBasket: Int): Long = {
+    val key = if (keys.size == 1) col(keys.head) else struct(keys.map(col): _*)
+    val stats = bi.groupBy(keys.map(col): _*).agg(count(lit(1)).as("sz"))
+      .agg(count(lit(1)), max(col("sz")), max_by(key, col("sz"))).head()
+    val maxSz = if (stats.isNullAt(1)) 0L else stats.getLong(1)
+    require(maxSz <= maxItemsPerBasket,
+      s"densest basket ${stats.get(2)} holds $maxSz items > " +
+        s"maxItemsPerBasket=$maxItemsPerBasket")
+    stats.getLong(0)
+  }
+
   /**
    * Association pairs: (item_a, item_b, support, conf_ab, conf_ba, lift)
    * for item_a < item_b, support ≥ `minSupport` baskets. conf_ab =
@@ -38,17 +58,7 @@ object Association {
     // upstream (possibly join-shaped) basket table each time
     val bi = df.select(col(basketCol).as("b"), col(itemCol).cast("string").as("i"))
       .where(col("i").isNotNull).distinct().cache()
-    // ONE probe for the occupancy contract AND the basket count: the old
-    // limit(1) fat-probe only part-materialized the cache (limit
-    // short-circuits partitions), so the separate nBaskets count and the
-    // first pair join each re-ran the upstream join+distinct (measured:
-    // three ~10-task-second stages per q207 run)
-    val __bstats = bi.groupBy(col("b")).agg(count(lit(1)).as("sz"))
-      .agg(count(lit(1)), max(col("sz"))).head()
-    val nBaskets = __bstats.getLong(0)
-    val __maxSz = if (__bstats.isNullAt(1)) 0L else __bstats.getLong(1)
-    require(__maxSz <= maxItemsPerBasket,
-      s"densest basket holds ${__maxSz} items > maxItemsPerBasket=$maxItemsPerBasket")
+    val nBaskets = guardOccupancy(bi, Seq("b"), maxItemsPerBasket)
     val singles = bi.groupBy(col("i")).agg(count(lit(1)).as("supp"))
     val l = bi.select(col("b"), col("i").as("item_a"))
     val r = bi.select(col("b"), col("i").as("item_b"))
@@ -85,15 +95,7 @@ object Association {
     val bi = df.select(col(tagCol).as("tag"), col(basketCol).as("b"),
         col(itemCol).cast("string").as("i"))
       .where(col("i").isNotNull && col("tag").isNotNull).distinct().cache()
-    // full-materializing occupancy probe (see pairs/triples: a limit(1)
-    // probe leaves cache partitions cold and the pair join re-runs the
-    // upstream distinct)
-    val __mx = bi.groupBy(col("tag"), col("b")).agg(count(lit(1)).as("sz"))
-      .agg(max(col("sz"))).head()
-    val __maxSz = if (__mx.isNullAt(0)) 0L else __mx.getLong(0)
-    require(__maxSz <= maxItemsPerBasket,
-      s"densest (tag, basket) holds ${__maxSz} items > " +
-        s"maxItemsPerBasket=$maxItemsPerBasket")
+    guardOccupancy(bi, Seq("tag", "b"), maxItemsPerBasket)
     val l = bi.select(col("tag"), col("b"), col("i").as("item_a"))
     val r = bi.select(col("tag"), col("b"), col("i").as("item_b"))
     l.join(r, Seq("tag", "b")).where(col("item_a") < col("item_b"))
@@ -119,17 +121,7 @@ object Association {
       minSupport: Long = 2L, maxItemsPerBasket: Int = 1000): DataFrame = {
     val bi = df.select(col(basketCol).as("b"), col(itemCol).cast("string").as("i"))
       .where(col("i").isNotNull).distinct().cache()
-    // ONE probe for the occupancy contract AND the basket count: the old
-    // limit(1) fat-probe only part-materialized the cache (limit
-    // short-circuits partitions), so the separate nBaskets count and the
-    // first pair join each re-ran the upstream join+distinct (measured:
-    // three ~10-task-second stages per q207 run)
-    val __bstats = bi.groupBy(col("b")).agg(count(lit(1)).as("sz"))
-      .agg(count(lit(1)), max(col("sz"))).head()
-    val nBaskets = __bstats.getLong(0)
-    val __maxSz = if (__bstats.isNullAt(1)) 0L else __bstats.getLong(1)
-    require(__maxSz <= maxItemsPerBasket,
-      s"densest basket holds ${__maxSz} items > maxItemsPerBasket=$maxItemsPerBasket")
+    val nBaskets = guardOccupancy(bi, Seq("b"), maxItemsPerBasket)
     val singles = bi.groupBy(col("i")).agg(count(lit(1)).as("supp"))
     // the per-basket pair relation feeds BOTH the support floor and the
     // third-item extension — materialize it once (guarded-quadratic size,

@@ -564,10 +564,11 @@ object Dedup {
   /** Distributed-loop round count of the LAST [[connectedComponents]]
     * call on this thread (0 = the driver union-find fast path answered;
     * the fused seed round is not counted; the count includes the final
-    * no-change confirmation round). Instrumentation only — feeds
-    * [[graft.DensityScale]]'s rounds-vs-n decomposition: at constant
-    * density an O(log n) round count with per-round linear cost is the
-    * designed shape, and this is the number that proves it. */
+    * no-change confirmation round). Instrumentation only — feeds the
+    * rounds-vs-n decomposition (`cc_rounds`) of [[graft.Rehearse]]'s
+    * `density` family: at constant density an O(log n) round count with
+    * per-round linear cost is the designed shape, and this is the number
+    * that proves it. */
   val lastCcRounds = new ThreadLocal[Int] { override def initialValue(): Int = 0 }
 
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
@@ -1137,7 +1138,7 @@ object Dedup {
    * label, LSH bucket, k-means) feeds the same core: all-pairs cosine
    * WITHIN each cluster key, never across. Cost is Σ c² over cluster
    * sizes c — constant cluster density ⇒ linear in rows (the
-   * DensityScale-measured regime); `maxCluster` is the loud-contract
+   * regime `graft.Rehearse density` measures); `maxCluster` is the loud-contract
    * guard against a degenerate assignment. Assignment itself is the
    * caller's stated cost (O(n·k·d) for a k-centroid argmin).
    * Output: (cluster, a, b, cosine ≥ threshold), a < b.

@@ -70,7 +70,7 @@ object NanosPredicatePushdown extends Rule[LogicalPlan] {
   }
 }
 
-/** Extension installer: `SparkSession.builder.withExtensions(GraftExtensions.install)`. */
+/** Extension installer, passed to `withExtensions` by [[graft.Graft.localSession]]. */
 object GraftExtensions {
   val install: SparkSessionExtensions => Unit = { ext =>
     ext.injectOptimizerRule(_ => NanosPredicatePushdown)

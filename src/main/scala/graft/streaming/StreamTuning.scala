@@ -11,8 +11,8 @@ import org.apache.spark.sql.SparkSession
  * HDFS-backed store's version bookkeeping) regardless of how little
  * state each partition holds.
  *
- * Measured (graft.StreamScale decomposition, 2500 rows x 8 batches of
- * [[graft.pipeline.Dedup.dedupStreamNear]] on local[32]): with the batch
+ * Measured (the `stream` family of [[graft.Rehearse]], 2500 rows x 8
+ * batches of [[graft.pipeline.Dedup.dedupStreamNear]] on local[32]): with the batch
  * default of 32 shuffle partitions, per-batch wall time is 7-20 s and
  * state-store commit task-time 51-424 s/batch — for ~60k tiny state
  * entries; at 4 partitions the SAME workload runs ~1.2 s/batch flat with

@@ -67,9 +67,10 @@ class GraphOpsSpec extends SparkSpec {
 
   test("Association.pairs: mega-basket guard is loud") {
     val bi = (0 until 40).map(i => (1, s"i$i")).toDF("bk", "it")
-    intercept[IllegalArgumentException] {
+    val e = intercept[IllegalArgumentException] {
       Association.pairs(bi, "bk", "it", maxItemsPerBasket = 10).collect()
     }
+    assert(e.getMessage.contains("densest basket 1 holds 40 items"), e.getMessage)
   }
 
   test("pageRankFixed: hand-checked star graph, partition-independent") {
