@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -45,16 +45,306 @@ object GraphOps {
     * in ONE agg over the (cached) relation. Regime choice never affects
     * results — both paths are bit-identical by construction,
     * spec-pinned — so this gate only trades scheduling overhead against
-    * driver heap safety. */
+    * driver heap safety. The same job counts the relation, returned as
+    * `edges` so no caller pays a second `count()`. */
   private[graft] def fitsLocal(e: DataFrame, maxLocalEdges: Long,
       keyCols: Seq[String] = Seq("src", "dst"),
-      maxBytes: Long = MaxLocalBytes): Boolean = {
+      maxBytes: Long = MaxLocalBytes): LocalFit = {
     val probe = e.agg(count(lit(1)),
       keyCols.map(c => coalesce(sum(length(col(c).cast("string"))
         .cast("long")), lit(0L))).reduce(_ + _)).head()
     val n = probe.getLong(0)
     val bytes = probe.getLong(1) * 2L + n * keyCols.size * 48L
-    n <= maxLocalEdges && bytes <= maxBytes
+    LocalFit(n <= maxLocalEdges && bytes <= maxBytes, n)
+  }
+
+  /** [[fitsLocal]]'s verdict: `ok` picks the driver regime; `edges` is
+    * the relation's row count. */
+  private[graft] case class LocalFit(ok: Boolean, edges: Long)
+
+  // ---- the graph kernel: every operator below is built from these ----
+
+  /** Directed (src, dst) string edges with both ends non-null — the one
+    * place ids are cast. `extra` columns ride along; duplicates are kept
+    * (callers pick `distinct` and the materialization). */
+  private def directed(edges: DataFrame, dropLoops: Boolean = false,
+      extra: Seq[Column] = Nil): DataFrame = {
+    val e = edges.select(Seq(col("src").cast("string").as("src"),
+      col("dst").cast("string").as("dst")) ++ extra: _*)
+    val ends = col("src").isNotNull && col("dst").isNotNull
+    e.where(if (dropLoops) ends && col("src") =!= col("dst") else ends)
+  }
+
+  /** Both directions of every edge, deduplicated: the undirected graph as
+    * a directed relation (deg(v) = its out-rows). Self-loops dropped
+    * unless `dropLoops = false`. */
+  private def symmetric(edges: DataFrame, dropLoops: Boolean = true): DataFrame = {
+    val d = directed(edges, dropLoops)
+    d.unionByName(d.select(col("dst").as("src"), col("src").as("dst"))).distinct()
+  }
+
+  /** Canonical undirected edges (a = least, b = greatest), each edge once,
+    * self-loops dropped. */
+  private def undirected(edges: DataFrame): DataFrame =
+    directed(edges, dropLoops = true)
+      .select(least(col("src"), col("dst")).as("a"),
+        greatest(col("src"), col("dst")).as("b"))
+      .distinct()
+
+  /** Every id on either side of a (src, dst) relation, once. */
+  private def nodesOf(e: DataFrame): DataFrame =
+    e.select(col("src").as("node")).union(e.select(col("dst").as("node"))).distinct()
+
+  /** `require` that first releases the operator's cached relations: a
+    * refusal must not leave them behind for the rest of the session. */
+  private def refuseUnless(cond: Boolean, held: DataFrame*)(msg: => String): Unit = {
+    if (!cond) held.foreach(_.unpersist(false))
+    require(cond, msg)
+  }
+
+  /** The driver-side graph of a collected (src, dst) edge list: sorted
+    * node names (plus `extraNodes`), their index, the edge endpoints as
+    * int arrays and the out-adjacency (newest edge first). */
+  private final class LocalGraph(es: Array[(String, String)],
+      extraNodes: Seq[String] = Nil) {
+    val nodes: Array[String] =
+      (es.map(_._1) ++ es.map(_._2) ++ extraNodes).distinct.sorted
+    val n: Int = nodes.length
+    val m: Int = es.length
+    private val idx = new java.util.HashMap[String, Int](n * 2)
+    nodes.indices.foreach(i => idx.put(nodes(i), i))
+    val srcI: Array[Int] = es.map(e => idx.get(e._1): Int)
+    val dstI: Array[Int] = es.map(e => idx.get(e._2): Int)
+    def indexOf(name: String): Option[Int] =
+      if (idx.containsKey(name)) Some(idx.get(name)) else None
+    lazy val adj: Array[List[Int]] = {
+      val a = Array.fill(n)(List.empty[Int])
+      var k = 0
+      while (k < m) { a(srcI(k)) = dstI(k) :: a(srcI(k)); k += 1 }
+      a
+    }
+    def toDF(spark: SparkSession, values: Array[Long], name: String): DataFrame = {
+      import spark.implicits._
+      nodes.indices.map(i => (nodes(i), values(i))).toDF("node", name)
+    }
+  }
+
+  /** Collects the cached (src, dst) relation `e` into a [[LocalGraph]]
+    * and releases `e`. */
+  private def collectGraph(e: DataFrame): LocalGraph = {
+    val es = e.select("src", "dst").collect().map(r => (r.getString(0), r.getString(1)))
+    e.unpersist(false)
+    new LocalGraph(es)
+  }
+
+  /** The one exact PageRank, over a cached (src, dst, w) relation:
+    *
+    *   contrib(s→d) = (rank_s · 85 · w_sd) div (100 · Σ_out w_s)
+    *
+    * (w ≡ 1 is exactly `(rank·85) div (100·deg)`). With no `seeds` every
+    * node starts at 1e9 units and receives the 15% teleport; with seeds
+    * both masses split evenly over the seeds only, and the seeds join the
+    * node set. Two regimes, identical integer arithmetic. */
+  private def pageRank(e: DataFrame, iters: Int, maxLocalEdges: Long,
+      seeds: Seq[String] = Nil): DataFrame = {
+    val spark = e.sparkSession
+    val seedSet = seeds.toSet
+    val share = seedSet.size max 1
+    val initU = Unit9 / share
+    val teleportU = Unit9 * 15L / 100L / share
+    def isSeed(n: String): Boolean = seedSet.isEmpty || seedSet(n)
+    if (fitsLocal(e, maxLocalEdges).ok) {
+      val rows = e.collect()
+      e.unpersist(false)
+      val g = new LocalGraph(rows.map(r => (r.getString(0), r.getString(1))), seeds)
+      val w = rows.map(_.getLong(2))
+      val wOut = new Array[Long](g.n)
+      (0 until g.m).foreach(k => wOut(g.srcI(k)) += w(k))
+      val tele = g.nodes.map(v => if (isSeed(v)) teleportU else 0L)
+      var rank = g.nodes.map(v => if (isSeed(v)) initU else 0L)
+      for (_ <- 1 to iters) {
+        // long truncating division IS the definition (both regimes)
+        val inflow = new Array[Long](g.n)
+        var k = 0
+        while (k < g.m) {
+          val s = g.srcI(k)
+          inflow(g.dstI(k)) += (rank(s) * 85L * w(k)) / (100L * wOut(s))
+          k += 1
+        }
+        rank = Array.tabulate(g.n)(i => tele(i) + inflow(i))
+      }
+      g.toDF(spark, rank, "rank_units")
+    } else {
+      import spark.implicits._
+      val seedDf = seeds.toDF("node").withColumn("__seed", lit(1))
+      val nodes = (if (seeds.isEmpty) nodesOf(e)
+        else nodesOf(e).union(seedDf.select("node")).distinct()
+          .join(broadcast(seedDf), Seq("node"), "left")).cache()
+      val seedCol = if (seeds.isEmpty) lit(true) else col("__seed") === 1
+      def perNode(u: Long): Column = when(seedCol, lit(u)).otherwise(lit(0L))
+      val outW = e.groupBy(col("src")).agg(sum(col("w")).as("ws")).cache()
+      var rank = nodes.select(col("node"), perNode(initU).as("rank_units"))
+      for (i <- 1 to iters) {
+        val contribs = e
+          .join(rank.withColumnRenamed("node", "src"), "src")
+          .join(outW, "src")
+          // integer fixed-point: rank*85*w exact in long, `div` truncates
+          // BY DEFINITION (long `/` would go double)
+          .selectExpr("dst as node", "(rank_units * 85 * w) div (100 * ws) as c")
+          .groupBy(col("node")).agg(sum(col("c")).as("inflow"))
+        rank = nodes.join(contribs, Seq("node"), "left")
+          .select(col("node"),
+            (perNode(teleportU) + coalesce(col("inflow"), lit(0L))).as("rank_units"))
+        // truncate lineage EVERY iteration: otherwise iterate i carries i
+        // chained join/agg rounds through analysis+optimization (quadratic
+        // planner work) and, uncached, re-executes them. localCheckpoint
+        // materializes the iterate; exact longs make the cut loss-free. On
+        // an unreliable cluster swap for reliable checkpoint(dir) — the
+        // iterate is O(|V|) either way.
+        if (i < iters) rank = rank.localCheckpoint(true)
+      }
+      rank
+    }
+  }
+
+  /** Score units of the power iterations ([[hits]], eigenvector, Katz). */
+  private val Unit6: Long = 1000000L
+
+  /** One driver propagate step: out(to(j)) += x(from(j)) over every edge. */
+  private def propagate(x: Array[Long], from: Array[Int], to: Array[Int]): Array[Long] = {
+    val out = new Array[Long](x.length)
+    var j = 0
+    while (j < from.length) { out(to(j)) += x(from(j)); j += 1 }
+    out
+  }
+
+  /** L1-normalize to Unit6 total mass in place (truncating div); an
+    * all-zero vector stays zero. */
+  private def normalize(a: Array[Long]): Array[Long] = {
+    val t = a.sum
+    if (t != 0L) { var i = 0; while (i < a.length) { a(i) = a(i) * Unit6 / t; i += 1 } }
+    a
+  }
+
+  /** One distributed propagate step over the cached (src, dst) relation
+    * `e`: (node, s = Σ x.s over the edges `from` → `to`) for every node
+    * that receives mass. */
+  private def propagate(e: DataFrame, x: DataFrame, from: String, to: String): DataFrame =
+    e.join(x.withColumnRenamed("node", from), from)
+      .groupBy(col(to).as("node")).agg(sum(col("s")).as("s"))
+
+  /** A propagated `raw` on every node of `nodes` (0 where none flowed in). */
+  private def onNodes(nodes: DataFrame, raw: DataFrame): DataFrame =
+    nodes.join(raw, Seq("node"), "left")
+      .select(col("node"), coalesce(col("s"), lit(0L)).as("s"))
+
+  /** [[normalize]] as a plan: `raw`'s total, broadcast back. */
+  private def normalize(nodes: DataFrame, raw: DataFrame): DataFrame =
+    onNodes(nodes, raw).crossJoin(broadcast(raw.agg(sum(col("s")).as("t"))))
+      .selectExpr("node",
+        "CASE WHEN t = 0 OR t IS NULL THEN s ELSE (s * 1000000) div t END as s")
+
+  /** Power iteration x ← finish(A·x) from x = Unit6 everywhere, `iters`
+    * rounds over the cached symmetric relation `e`. `finishL` and
+    * `finishD` are the same per-round step for the driver and the
+    * distributed regime (the latter gets the nodes and the raw inflow).
+    * Output: (node, score_units), ordered by node. */
+  private def power(e: DataFrame, iters: Int, local: Boolean,
+      finishL: Array[Long] => Array[Long],
+      finishD: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    if (local) {
+      val g = collectGraph(e)
+      var x = Array.fill(g.n)(Unit6)
+      for (_ <- 1 to iters) x = finishL(propagate(x, g.srcI, g.dstI))
+      g.toDF(e.sparkSession, x, "score_units").orderBy("node")
+    } else {
+      val nodes = nodesOf(e).cache()
+      var x = nodes.withColumn("s", lit(Unit6))
+      for (_ <- 1 to iters)
+        x = finishD(nodes, propagate(e, x, "src", "dst")).localCheckpoint(true)
+      nodes.unpersist(false); e.unpersist(false) // x no longer reads them
+      x.select(col("node"), col("s").as("score_units")).orderBy("node")
+    }
+  }
+
+  /** Hop distances on the driver: `visit(s, t, d)` for every pair
+    * s → t ≠ s reachable within `maxHops` (d ≥ 1), per source of
+    * `sources` in turn, t in index order. */
+  private def hopsLocal(g: LocalGraph, maxHops: Int,
+      sources: Iterable[Int])(visit: (Int, Int, Int) => Unit): Unit = {
+    val dist = new Array[Int](g.n)
+    val queue = new Array[Int](g.n)
+    for (s0 <- sources) {
+      java.util.Arrays.fill(dist, -1)
+      dist(s0) = 0; queue(0) = s0
+      var head = 0; var tail = 1
+      while (head < tail) {
+        val u = queue(head); head += 1
+        val du = dist(u)
+        if (du < maxHops) g.adj(u).foreach { w =>
+          if (dist(w) < 0) { dist(w) = du + 1; queue(tail) = w; tail += 1 }
+        }
+      }
+      var i = 0
+      while (i < g.n) { if (i != s0 && dist(i) > 0) visit(s0, i, dist(i)); i += 1 }
+    }
+  }
+
+  /** All-sources hop distances, distributed: (src, node, d) per ordered
+    * reachable pair of the cached symmetric relation `e`. Each round
+    * relaxes d via min(d, neighbor + 1), with a lineage cut, until a
+    * round adds no pair or `maxHops` is reached. */
+  private def hopsDist(e: DataFrame, maxHops: Int): DataFrame = {
+    var dist = e.select(col("src"), col("dst").as("node"), lit(1L).as("d"))
+      .distinct().localCheckpoint(true)
+    var round = 1
+    var grew = true
+    while (grew && round < maxHops) {
+      val next = dist.join(e.withColumnRenamed("src", "node"), "node")
+        .select(col("src"), col("dst").as("node"), (col("d") + 1L).as("d"))
+        .where(col("src") =!= col("node"))
+        .unionByName(dist)
+        .groupBy(col("src"), col("node")).agg(min(col("d")).as("d"))
+        .localCheckpoint(true)
+      grew = next.count() > dist.count()
+      dist = next
+      round += 1
+    }
+    dist
+  }
+
+  /** The wedge-join hub contract's refusal message. */
+  private def hubRefusal(op: String, worstDeg: Long, maxDegree: Long): String =
+    s"$op: max node degree $worstDeg > maxDegree=$maxDegree — the wedge " +
+      "join is Sum(deg^2); degree-cap-prefilter the edge list or raise the bound"
+
+  /** The link-prediction scaffold over the symmetrized graph: refuse a
+    * hub past `maxDegree`, then aggregate every common-neighbor wedge
+    * (z; u < w) per NON-adjacent pair — `n_common` plus `agg` over the
+    * wedge's (z, deg) — and let `rank` cut the candidates (given the
+    * degrees (z, deg)) to a bounded result, checkpointed before the
+    * cached relation is released. */
+  private def linkScores(edges: DataFrame, maxDegree: Long, op: String, agg: Column)(
+      rank: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    // cache: the symmetrize+dedup shuffle feeds the degree probe, the
+    // degree join, both wedge sides, and the adjacency anti-join
+    val sym = symmetric(edges).cache()
+    val deg = sym.groupBy(col("src").as("z")).agg(count(lit(1)).as("deg"))
+    val worstDeg = deg.agg(coalesce(max(col("deg")), lit(0L))).head().getLong(0)
+    refuseUnless(worstDeg <= maxDegree, sym)(hubRefusal(op, worstDeg, maxDegree))
+    val nbr = sym.select(col("src").as("z"), col("dst").as("n"))
+    val wedges = nbr.select(col("z"), col("n").as("u"))
+      .join(nbr.select(col("z"), col("n").as("w")), "z")
+      .where(col("u") < col("w"))
+    val canon = sym.where(col("src") < col("dst"))
+      .select(col("src").as("u"), col("dst").as("w"))
+    val cand = wedges.join(deg, "z")
+      .groupBy(col("u"), col("w"))
+      .agg(count(lit(1)).as("n_common"), agg)
+      .join(canon, Seq("u", "w"), "left_anti")
+    val out = rank(cand, deg).localCheckpoint(true) // bounded — then free sym
+    sym.unpersist(false)
+    out
   }
 
   /**
@@ -77,53 +367,8 @@ object GraphOps {
     require(iters >= 1 && iters <= 50, s"iters in [1,50]: $iters")
     // referenced by the count probe and (either regime) the loop — cache
     // so the possibly-join-shaped edge derivation runs once
-    val e = edges.selectExpr("cast(src as string) as src", "cast(dst as string) as dst")
-      .where(col("src").isNotNull && col("dst").isNotNull).distinct().cache()
-    val teleportU = Unit9 * 15L / 100L
-    if (fitsLocal(e, maxLocalEdges)) {
-      val es = e.collect().map(r => (r.getString(0), r.getString(1)))
-      e.unpersist(false)
-      val nodes = (es.map(_._1) ++ es.map(_._2)).distinct.sorted
-      val deg = es.groupBy(_._1).view.mapValues(_.size.toLong).toMap
-      var rank: Map[String, Long] = nodes.map(_ -> Unit9).toMap
-      for (_ <- 1 to iters) {
-        val inflow = scala.collection.mutable.Map.empty[String, Long]
-        es.foreach { case (s, d) =>
-          // same fixed-point step as the distributed branch: long
-          // truncating division IS the definition
-          inflow(d) = inflow.getOrElse(d, 0L) + (rank(s) * 85L) / (100L * deg(s))
-        }
-        rank = nodes.iterator.map(n => n -> (teleportU + inflow.getOrElse(n, 0L))).toMap
-      }
-      val spark = edges.sparkSession
-      import spark.implicits._
-      nodes.map(n => (n, rank(n))).toSeq.toDF("node", "rank_units")
-    } else {
-      val nodes = e.select(col("src").as("node"))
-        .union(e.select(col("dst").as("node"))).distinct().cache()
-      val outDeg = e.groupBy(col("src")).agg(count(lit(1)).as("deg")).cache()
-      var rank = nodes.withColumn("rank_units", lit(Unit9))
-      for (i <- 1 to iters) {
-        val contribs = e
-          .join(rank.withColumnRenamed("node", "src"), "src")
-          .join(outDeg, "src")
-          // integer fixed-point: rank*85 exact in long (rank ≤ n·1e9, edges
-          // bounded), `div` truncates BY DEFINITION (long `/` would go double)
-          .selectExpr("dst as node", "(rank_units * 85) div (100 * deg) as c")
-          .groupBy(col("node")).agg(sum(col("c")).as("inflow"))
-        rank = nodes.join(contribs, Seq("node"), "left")
-          .select(col("node"),
-            (lit(teleportU) + coalesce(col("inflow"), lit(0L))).as("rank_units"))
-        // truncate lineage EVERY iteration: otherwise iterate i carries i
-        // chained join/agg rounds through analysis+optimization (quadratic
-        // planner work) and, uncached, re-executes them. localCheckpoint
-        // materializes the iterate; exact longs make the cut loss-free. On
-        // an unreliable cluster swap for reliable checkpoint(dir) — the
-        // iterate is O(|V|) either way.
-        if (i < iters) rank = rank.localCheckpoint(true)
-      }
-      rank
-    }
+    pageRank(directed(edges).distinct().withColumn("w", lit(1L)).cache(),
+      iters, maxLocalEdges)
   }
 
   /**
@@ -139,54 +384,8 @@ object GraphOps {
       iters: Int = 5, maxLocalEdges: Long = 1000000L): DataFrame = {
     require(iters >= 1 && iters <= 50, s"iters in [1,50]: $iters")
     require(seeds.nonEmpty, "at least one seed")
-    val seedSet = seeds.toSet
-    val seedShare = Unit9 / seedSet.size
-    val teleportU = Unit9 * 15L / 100L / seedSet.size
-    val e = edges.selectExpr("cast(src as string) as src", "cast(dst as string) as dst")
-      .where(col("src").isNotNull && col("dst").isNotNull).distinct().cache()
-    if (fitsLocal(e, maxLocalEdges)) {
-      val es = e.collect().map(r => (r.getString(0), r.getString(1)))
-      e.unpersist(false)
-      val nodes = (es.map(_._1) ++ es.map(_._2) ++ seeds).distinct.sorted
-      val deg = es.groupBy(_._1).view.mapValues(_.size.toLong).toMap
-      var rank: Map[String, Long] =
-        nodes.map(n => n -> (if (seedSet(n)) seedShare else 0L)).toMap
-      for (_ <- 1 to iters) {
-        val inflow = scala.collection.mutable.Map.empty[String, Long]
-        es.foreach { case (s, d) =>
-          inflow(d) = inflow.getOrElse(d, 0L) + (rank(s) * 85L) / (100L * deg(s))
-        }
-        rank = nodes.iterator.map(n => n ->
-          ((if (seedSet(n)) teleportU else 0L) + inflow.getOrElse(n, 0L))).toMap
-      }
-      val spark = edges.sparkSession
-      import spark.implicits._
-      nodes.map(n => (n, rank(n))).toSeq.toDF("node", "rank_units")
-    } else {
-      val spark = edges.sparkSession
-      import spark.implicits._
-      val seedDf = seeds.toDF("node").withColumn("__seed", lit(1))
-      val nodes = e.select(col("src").as("node"))
-        .union(e.select(col("dst").as("node")))
-        .union(seedDf.select("node")).distinct()
-        .join(broadcast(seedDf), Seq("node"), "left").cache()
-      val outDeg = e.groupBy(col("src")).agg(count(lit(1)).as("deg")).cache()
-      var rank = nodes.select(col("node"),
-        when(col("__seed") === 1, lit(seedShare)).otherwise(lit(0L)).as("rank_units"))
-      for (i <- 1 to iters) {
-        val contribs = e
-          .join(rank.withColumnRenamed("node", "src"), "src")
-          .join(outDeg, "src")
-          .selectExpr("dst as node", "(rank_units * 85) div (100 * deg) as c")
-          .groupBy(col("node")).agg(sum(col("c")).as("inflow"))
-        rank = nodes.join(contribs, Seq("node"), "left")
-          .select(col("node"),
-            (when(col("__seed") === 1, lit(teleportU)).otherwise(lit(0L))
-              + coalesce(col("inflow"), lit(0L))).as("rank_units"))
-        if (i < iters) rank = rank.localCheckpoint(true)
-      }
-      rank
-    }
+    pageRank(directed(edges).distinct().withColumn("w", lit(1L)).cache(),
+      iters, maxLocalEdges, seeds)
   }
 
   /**
@@ -205,46 +404,9 @@ object GraphOps {
   def pageRankWeighted(edges: DataFrame, iters: Int = 5,
       maxLocalEdges: Long = 1000000L): DataFrame = {
     require(iters >= 1 && iters <= 50, s"iters in [1,50]: $iters")
-    val e = edges.selectExpr("cast(src as string) as src",
-        "cast(dst as string) as dst", "cast(w as long) as w")
-      .where(col("src").isNotNull && col("dst").isNotNull && col("w") > 0)
-      .cache()
-    val teleportU = Unit9 * 15L / 100L
-    if (fitsLocal(e, maxLocalEdges)) {
-      val es = e.collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-      e.unpersist(false)
-      val nodes = (es.map(_._1) ++ es.map(_._2)).distinct.sorted
-      val wOut = es.groupBy(_._1).view.mapValues(_.map(_._3).sum).toMap
-      var rank: Map[String, Long] = nodes.map(_ -> Unit9).toMap
-      for (_ <- 1 to iters) {
-        val inflow = scala.collection.mutable.Map.empty[String, Long]
-        es.foreach { case (s, d, w) =>
-          inflow(d) = inflow.getOrElse(d, 0L) +
-            (rank(s) * 85L * w) / (100L * wOut(s))
-        }
-        rank = nodes.iterator.map(n => n -> (teleportU + inflow.getOrElse(n, 0L))).toMap
-      }
-      val spark = edges.sparkSession
-      import spark.implicits._
-      nodes.map(n => (n, rank(n))).toSeq.toDF("node", "rank_units")
-    } else {
-      val nodes = e.select(col("src").as("node"))
-        .union(e.select(col("dst").as("node"))).distinct().cache()
-      val outW = e.groupBy(col("src")).agg(sum(col("w")).as("ws")).cache()
-      var rank = nodes.withColumn("rank_units", lit(Unit9))
-      for (i <- 1 to iters) {
-        val contribs = e
-          .join(rank.withColumnRenamed("node", "src"), "src")
-          .join(outW, "src")
-          .selectExpr("dst as node", "(rank_units * 85 * w) div (100 * ws) as c")
-          .groupBy(col("node")).agg(sum(col("c")).as("inflow"))
-        rank = nodes.join(contribs, Seq("node"), "left")
-          .select(col("node"),
-            (lit(teleportU) + coalesce(col("inflow"), lit(0L))).as("rank_units"))
-        if (i < iters) rank = rank.localCheckpoint(true)
-      }
-      rank
-    }
+    // no dedup: parallel edges add their weights
+    pageRank(directed(edges, extra = Seq(col("w").cast("long").as("w")))
+      .where(col("w") > 0).cache(), iters, maxLocalEdges)
   }
 
   /**
@@ -269,70 +431,35 @@ object GraphOps {
   def hits(edges: DataFrame, iters: Int = 5,
       maxLocalEdges: Long = 4000000L): DataFrame = {
     require(iters >= 1 && iters <= 50, s"iters in [1,50]: $iters")
-    val Unit6 = 1000000L
-    val e = edges.selectExpr("cast(src as string) as src", "cast(dst as string) as dst")
-      .where(col("src").isNotNull && col("dst").isNotNull).distinct().cache()
-    val ecnt = e.count()
-    require(ecnt < 9200000L,
-      s"hits: $ecnt edges exceeds the exact-integer bound — shard or rescale")
-    if (ecnt <= maxLocalEdges && fitsLocal(e, maxLocalEdges)) {
-      val es = e.collect().map(r => (r.getString(0), r.getString(1)))
-      e.unpersist(false)
-      val nodes = (es.map(_._1) ++ es.map(_._2)).distinct.sorted
-      // millions of edges × iters: index nodes once and loop over
-      // primitive arrays — boxed-map lookups here cost more than the
-      // distributed branch's shuffles
-      val idx = new java.util.HashMap[String, Int](nodes.length * 2)
-      nodes.zipWithIndex.foreach { case (n, i) => idx.put(n, i) }
-      val m = es.length; val n = nodes.length
-      val srcI = new Array[Int](m); val dstI = new Array[Int](m)
-      var k = 0
-      while (k < m) { srcI(k) = idx.get(es(k)._1); dstI(k) = idx.get(es(k)._2); k += 1 }
-      def normalize(a: Array[Long]): Unit = {
-        var t = 0L; var i = 0
-        while (i < n) { t += a(i); i += 1 }
-        if (t != 0L) { i = 0; while (i < n) { a(i) = a(i) * Unit6 / t; i += 1 } }
-      }
-      val hub = Array.fill(n)(Unit6)
-      val auth = new Array[Long](n)
+    val e = directed(edges).distinct().cache()
+    val fit = fitsLocal(e, maxLocalEdges)
+    refuseUnless(fit.edges < 9200000L, e)(
+      s"hits: ${fit.edges} edges exceeds the exact-integer bound — shard or rescale")
+    val spark = edges.sparkSession
+    if (fit.ok) {
+      // millions of edges × iters: primitive arrays over the indexed
+      // graph — boxed-map lookups here cost more than the distributed
+      // branch's shuffles
+      val g = collectGraph(e)
+      var hub = Array.fill(g.n)(Unit6)
+      var auth = new Array[Long](g.n)
       for (_ <- 1 to iters) {
-        java.util.Arrays.fill(auth, 0L)
-        var j = 0
-        while (j < m) { auth(dstI(j)) += hub(srcI(j)); j += 1 }
-        normalize(auth)
-        java.util.Arrays.fill(hub, 0L)
-        j = 0
-        while (j < m) { hub(srcI(j)) += auth(dstI(j)); j += 1 }
-        normalize(hub)
+        auth = normalize(propagate(hub, g.srcI, g.dstI))
+        hub = normalize(propagate(auth, g.dstI, g.srcI))
       }
-      val spark = edges.sparkSession
       import spark.implicits._
-      (nodes.indices.map(i => (nodes(i), "hub", hub(i))) ++
-        nodes.indices.map(i => (nodes(i), "authority", auth(i))))
+      (g.nodes.indices.map(i => (g.nodes(i), "hub", hub(i))) ++
+        g.nodes.indices.map(i => (g.nodes(i), "authority", auth(i))))
         .toDF("node", "role", "score_units")
     } else {
-      val spark = edges.sparkSession
-      val nodes = e.select(col("src").as("node"))
-        .union(e.select(col("dst").as("node"))).distinct().cache()
-      def normalize(df: DataFrame): DataFrame = {
-        val t = df.agg(sum(col("s")).as("t"))
-        df.crossJoin(broadcast(t))
-          .selectExpr("node", "CASE WHEN t = 0 THEN s ELSE (s * 1000000) div t END as s")
-      }
+      val nodes = nodesOf(e).cache()
       var hub = nodes.withColumn("s", lit(Unit6))
       var auth = nodes.withColumn("s", lit(0L))
-      for (i <- 1 to iters) {
-        val aRaw = e.join(hub.withColumnRenamed("node", "src"), "src")
-          .groupBy(col("dst").as("node")).agg(sum(col("s")).as("s"))
-        auth = normalize(nodes.join(aRaw, Seq("node"), "left")
-          .select(col("node"), coalesce(col("s"), lit(0L)).as("s")))
-          .localCheckpoint(true)
-        val hRaw = e.join(auth.withColumnRenamed("node", "dst"), "dst")
-          .groupBy(col("src").as("node")).agg(sum(col("s")).as("s"))
-        hub = normalize(nodes.join(hRaw, Seq("node"), "left")
-          .select(col("node"), coalesce(col("s"), lit(0L)).as("s")))
-          .localCheckpoint(true)
+      for (_ <- 1 to iters) {
+        auth = normalize(nodes, propagate(e, hub, "src", "dst")).localCheckpoint(true)
+        hub = normalize(nodes, propagate(e, auth, "dst", "src")).localCheckpoint(true)
       }
+      nodes.unpersist(false); e.unpersist(false) // hub/auth no longer read them
       hub.selectExpr("node", "'hub' as role", "s as score_units")
         .unionByName(auth.selectExpr("node", "'authority' as role", "s as score_units"))
     }
@@ -349,27 +476,18 @@ object GraphOps {
   def bfsHops(edges: DataFrame, source: String, maxHops: Int = 5,
       maxLocalEdges: Long = 1000000L): DataFrame = {
     require(maxHops >= 1 && maxHops <= 30, s"maxHops in [1,30]: $maxHops")
-    val e = edges.selectExpr("cast(src as string) as src", "cast(dst as string) as dst")
-      .where(col("src").isNotNull && col("dst").isNotNull).distinct().cache()
+    val e = directed(edges).distinct().cache()
     // same two-regime cutover as pageRankFixed: a thresholded analytics
     // graph is usually tiny next to its derivation — BFS over the
     // collected adjacency is the plan you'd pick on a real cluster too
-    if (fitsLocal(e, maxLocalEdges)) {
-      val adj = e.collect().map(r => (r.getString(0), r.getString(1)))
-        .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-      e.unpersist(false)
-      val dist = scala.collection.mutable.Map(source -> 0L)
-      var frontier = Seq(source)
-      var h = 0
-      while (frontier.nonEmpty && h < maxHops) {
-        h += 1
-        frontier = frontier.flatMap(n => adj.getOrElse(n, Array.empty[String]))
-          .distinct.filterNot(dist.contains)
-        frontier.foreach(n => dist(n) = h.toLong)
-      }
+    if (fitsLocal(e, maxLocalEdges).ok) {
+      val g = collectGraph(e)
+      val dist = Seq.newBuilder[(String, Long)] += ((source, 0L))
+      hopsLocal(g, maxHops, g.indexOf(source))((_, t, d) =>
+        dist += ((g.nodes(t), d.toLong)))
       val spark = edges.sparkSession
       import spark.implicits._
-      dist.toSeq.toDF("node", "d")
+      dist.result().toDF("node", "d")
     } else {
       var dist = e.sparkSession.range(1)
         .select(lit(source).as("node"), lit(0L).as("d"))
@@ -401,14 +519,9 @@ object GraphOps {
    * diameter_lb, n_reached_start, n_reached_peripheral).
    */
   def diameterEstimate(edges: DataFrame, maxHops: Int = 16): DataFrame = {
-    val und = edges.selectExpr("cast(src as string) as src",
-        "cast(dst as string) as dst")
-      .where(col("src").isNotNull && col("dst").isNotNull)
     // materialize the (possibly expensive) edge derivation ONCE — the
     // start pick and BOTH sweeps reuse it (the landmarkCloseness lesson)
-    val sym = und.unionByName(
-      und.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().localCheckpoint(true)
+    val sym = symmetric(edges, dropLoops = false).localCheckpoint(true)
     val start = sym.select(col("src").as("node")).distinct()
       .orderBy(md5(col("node")), col("node")).limit(1)
       .head().getString(0)
@@ -446,13 +559,8 @@ object GraphOps {
     // materialize the (possibly expensive) edge derivation ONCE — the
     // landmark pick and all L BFS expansions reuse it (without this the
     // upstream graph build re-runs per landmark, L+1 times)
-    val e = edges.selectExpr("cast(src as string) as src",
-        "cast(dst as string) as dst")
-      .where(col("src").isNotNull && col("dst").isNotNull)
-      .distinct().localCheckpoint(true)
-    val nodes = e.select(col("src").as("node"))
-      .unionByName(e.select(col("dst").as("node"))).distinct()
-    val lms = nodes.withColumn("__h", md5(col("node")))
+    val e = directed(edges).distinct().localCheckpoint(true)
+    val lms = nodesOf(e).withColumn("__h", md5(col("node")))
       .orderBy(col("__h"), col("node")).limit(nLandmarks)
       .collect().map(_.getString(0)) // ≤ nLandmarks rows
     require(lms.nonEmpty, "landmarkCloseness needs at least one node")
@@ -483,14 +591,12 @@ object GraphOps {
   def triangles(edges: DataFrame, maxDegree: Long = 100000L): DataFrame = {
     require(maxDegree >= 1, "maxDegree >= 1")
     // cache: the dedup shuffle feeds the probe + three wedge-join scans
-    val e = edges.selectExpr("cast(src as string) as a", "cast(dst as string) as b")
-      .where(col("a") < col("b")).distinct().cache()
+    val e = directed(edges).where(col("src") < col("dst")).toDF("a", "b")
+      .distinct().cache()
     val worstDeg = e.select(col("a").as("n")).unionAll(e.select(col("b").as("n")))
       .groupBy(col("n")).agg(count(lit(1)).as("d"))
       .agg(coalesce(max(col("d")), lit(0L))).head().getLong(0)
-    require(worstDeg <= maxDegree,
-      s"triangles: max node degree $worstDeg > maxDegree=$maxDegree — the wedge " +
-        "join is Sum(deg^2); degree-cap-prefilter the edge list or raise the bound")
+    refuseUnless(worstDeg <= maxDegree, e)(hubRefusal("triangles", worstDeg, maxDegree))
     val wedges = e.select(col("a").as("x"), col("b").as("y"))
       .join(e.select(col("a").as("y"), col("b").as("z")), "y")
     val out = wedges.join(e.select(col("a").as("x"), col("b").as("z")), Seq("x", "z"))
@@ -501,27 +607,6 @@ object GraphOps {
     out
   }
 
-  /**
-   * k-core decomposition by iterative peeling (Seidman 1983): the
-   * maximal subgraph in which every node keeps degree ≥ k — the
-   * standard "dense kernel" filter for link/citation graphs (spam
-   * cores, community seeds) that a plain degree cut gets wrong (a
-   * high-degree node whose neighbors all vanish must vanish too).
-   * Input edges are UNDIRECTED (symmetrized + deduped here; self-loops
-   * dropped); each round removes EVERY node currently under degree k
-   * simultaneously — batch peeling reaches the same unique fixpoint as
-   * sequential. Same two-regime doctrine as [[pageRankFixed]]: under
-   * `maxLocalEdges` the peel runs on the collected edge list; above it
-   * each round is one degree aggregation + two anti-joins with a
-   * lineage cut, and an empty removal set ends the loop. A peel that
-   * has not CONVERGED within `maxRounds` throws (the result would be a
-   * silent superset); rounds needed is the graph's degeneracy ordering
-   * depth — bounded by diameter-like constants on real graphs, O(n) on
-   * adversarial paths, hence the explicit bound.
-   *
-   * Output: (node, degree) for the k-core's nodes with their degree
-   * INSIDE the core (all ≥ k); empty when no k-core exists.
-   */
   /**
    * Adamic–Adar link prediction: score NON-adjacent pairs by their
    * common neighbors, weighting rare neighbors up —
@@ -546,36 +631,14 @@ object GraphOps {
       maxDegree: Long = 100000L): DataFrame = {
     require(topK >= 1, "topK >= 1")
     require(maxDegree >= 2, "maxDegree >= 2")
-    val dir0 = edges.selectExpr("cast(src as string) as src", "cast(dst as string) as dst")
-      .where(col("src").isNotNull && col("dst").isNotNull && col("src") =!= col("dst"))
-    // cache: the symmetrize+dedup shuffle feeds the degree probe, the
-    // degree join, both wedge sides, and the adjacency anti-join
-    val sym = dir0.unionByName(dir0.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().cache()
-    val deg = sym.groupBy(col("src").as("z")).agg(count(lit(1)).as("deg"))
-    val worstDeg = deg.agg(coalesce(max(col("deg")), lit(0L))).head().getLong(0)
-    require(worstDeg <= maxDegree,
-      s"adamicAdar: max node degree $worstDeg > maxDegree=$maxDegree — the wedge " +
-        "join is Sum(deg^2); degree-cap-prefilter the edge list or raise the bound")
-    val nbr = sym.select(col("src").as("z"), col("dst").as("n"))
-    val wedges = nbr.select(col("z"), col("n").as("u"))
-      .join(nbr.select(col("z"), col("n").as("w")), "z")
-      .where(col("u") < col("w"))
-    val canon = sym.where(col("src") < col("dst"))
-      .select(col("src").as("u"), col("dst").as("w"))
-    val out = wedges.join(deg, "z")
-      .groupBy(col("u"), col("w"))
-      .agg(count(lit(1)).as("n_common"),
+    linkScores(edges, maxDegree, "adamicAdar",
         sum(round(lit(1.0) / log(col("deg").cast("double")), 12)
-          .cast("decimal(24,12)")).as("__s"))
-      .join(canon, Seq("u", "w"), "left_anti")
-      .orderBy(col("__s").desc, col("u").asc, col("w").asc)
-      .limit(topK)
-      .select(col("u").as("node_a"), col("w").as("node_b"), col("n_common"),
-        round(col("__s").cast("double"), 6).as("score"))
-      .localCheckpoint(true) // <= topK rows — materialize, then free sym
-    sym.unpersist(false)
-    out
+          .cast("decimal(24,12)")).as("__s")) { (cand, _) =>
+      cand.orderBy(col("__s").desc, col("u").asc, col("w").asc)
+        .limit(topK)
+        .select(col("u").as("node_a"), col("w").as("node_b"), col("n_common"),
+          round(col("__s").cast("double"), 6).as("score"))
+    }
   }
 
   /**
@@ -607,33 +670,26 @@ object GraphOps {
   def labelPropagation(edges: DataFrame, iters: Int = 3,
       maxLocalEdges: Long = 1000000L): DataFrame = {
     require(iters >= 1 && iters <= 20, s"iters in [1,20]: $iters")
-    val dir0 = edges.selectExpr("cast(src as string) as src", "cast(dst as string) as dst")
-      .where(col("src").isNotNull && col("dst").isNotNull && col("src") =!= col("dst"))
-    val sym = dir0.unionByName(dir0.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().cache()
-    val n = sym.count()
-    if (n <= maxLocalEdges && fitsLocal(sym, maxLocalEdges)) {
-      val es = sym.collect().map(r => (r.getString(0), r.getString(1)))
-      sym.unpersist(false)
-      val nodes = (es.map(_._1) ++ es.map(_._2)).distinct.sorted
-      var lab: Map[String, String] = nodes.map(x => x -> x).toMap
+    val sym = symmetric(edges).cache()
+    if (fitsLocal(sym, maxLocalEdges).ok) {
+      val g = collectGraph(sym)
+      // a label is the index of the node it names: nodes are sorted, so
+      // index order IS label order
+      var lab = Array.tabulate(g.n)(identity)
       for (_ <- 1 to iters) {
         // votes(dst) = multiset of neighbor labels; argmax by (count
         // desc, label asc) — same total order as the window branch
-        val votes = scala.collection.mutable.Map
-          .empty[String, scala.collection.mutable.Map[String, Long]]
-        es.foreach { case (s, d) =>
-          val m = votes.getOrElseUpdate(d, scala.collection.mutable.Map.empty)
-          val l = lab(s); m(l) = m.getOrElse(l, 0L) + 1L
+        val votes = Array.fill(g.n)(scala.collection.mutable.Map.empty[Int, Long])
+        (0 until g.m).foreach { k =>
+          val m = votes(g.dstI(k)); val l = lab(g.srcI(k))
+          m(l) = m.getOrElse(l, 0L) + 1L
         }
-        lab = nodes.map { v =>
-          val m = votes(v) // symmetrized: every node has >= 1 neighbor
-          v -> m.toSeq.minBy { case (l, c) => (-c, l) }._1
-        }.toMap
+        // symmetrized: every node has >= 1 neighbor
+        lab = votes.map(_.minBy { case (l, c) => (-c, l) }._1)
       }
       val spark = edges.sparkSession
       import spark.implicits._
-      nodes.map(v => (v, lab(v))).toSeq.toDF("node", "label")
+      g.nodes.indices.map(i => (g.nodes(i), g.nodes(lab(i)))).toDF("node", "label")
         .orderBy(col("node"))
     } else {
       val nodes = sym.select(col("src").as("node")).distinct().cache()
@@ -673,8 +729,8 @@ object GraphOps {
    */
   def clusteringCoefficient(edges: DataFrame,
       maxDegree: Long = 100000L): DataFrame = {
-    val e = edges.selectExpr("cast(src as string) as a", "cast(dst as string) as b")
-      .where(col("a") < col("b")).distinct().localCheckpoint(true)
+    val e = directed(edges).where(col("src") < col("dst")).toDF("a", "b")
+      .distinct().localCheckpoint(true)
     val tri = triangles(e.select(col("a").as("src"), col("b").as("dst")), maxDegree)
     val deg = e.select(col("a").as("node")).unionAll(e.select(col("b").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("degree"))
@@ -708,12 +764,7 @@ object GraphOps {
    * a degree-regular graph (zero variance) publishes NULL r.
    */
   def degreeAssortativity(edges: DataFrame): DataFrame = {
-    val und = edges.selectExpr("cast(src as string) as a",
-        "cast(dst as string) as b")
-      .where(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
-      .select(least(col("a"), col("b")).as("a"),
-        greatest(col("a"), col("b")).as("b"))
-      .distinct().localCheckpoint(true) // feeds degrees AND both joins
+    val und = undirected(edges).localCheckpoint(true) // feeds degrees AND both joins
     val dirE = und.select(col("a").as("src"), col("b").as("dst"))
       .unionAll(und.select(col("b").as("src"), col("a").as("dst")))
     val deg = dirE.groupBy(col("src").as("node"))
@@ -740,16 +791,34 @@ object GraphOps {
         .as("assortativity"))
   }
 
+  /**
+   * k-core decomposition by iterative peeling (Seidman 1983): the
+   * maximal subgraph in which every node keeps degree ≥ k — the
+   * standard "dense kernel" filter for link/citation graphs (spam
+   * cores, community seeds) that a plain degree cut gets wrong (a
+   * high-degree node whose neighbors all vanish must vanish too).
+   * Input edges are UNDIRECTED (symmetrized + deduped here; self-loops
+   * dropped); each round removes EVERY node currently under degree k
+   * simultaneously — batch peeling reaches the same unique fixpoint as
+   * sequential. Same two-regime doctrine as [[pageRankFixed]]: under
+   * `maxLocalEdges` the peel runs on the collected edge list; above it
+   * each round is one degree aggregation + two anti-joins with a
+   * lineage cut, and an empty removal set ends the loop. A peel that
+   * has not CONVERGED within `maxRounds` throws (the result would be a
+   * silent superset); rounds needed is the graph's degeneracy ordering
+   * depth — bounded by diameter-like constants on real graphs, O(n) on
+   * adversarial paths, hence the explicit bound.
+   *
+   * Output: (node, degree) for the k-core's nodes with their degree
+   * INSIDE the core (all ≥ k); empty when no k-core exists.
+   */
   def kCore(edges: DataFrame, k: Int, maxRounds: Int = 30,
       maxLocalEdges: Long = 1000000L): DataFrame = {
     require(k >= 1 && maxRounds >= 1, "k >= 1, maxRounds >= 1")
-    val dir0 = edges.selectExpr("cast(src as string) as src", "cast(dst as string) as dst")
-      .where(col("src").isNotNull && col("dst").isNotNull && col("src") =!= col("dst"))
-    val e0 = dir0.unionByName(dir0.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().cache()
+    val e0 = symmetric(edges).cache()
     val spark = edges.sparkSession
     import spark.implicits._
-    if (fitsLocal(e0, maxLocalEdges)) {
+    if (fitsLocal(e0, maxLocalEdges).ok) {
       var es = e0.collect().map(r => (r.getString(0), r.getString(1)))
       e0.unpersist(false)
       var converged = false
@@ -818,53 +887,8 @@ object GraphOps {
   def eigenvectorCentrality(edges: DataFrame, iters: Int = 5,
       maxLocalEdges: Long = 4000000L): DataFrame = {
     require(iters >= 1 && iters <= 50, s"iters in [1,50]: $iters")
-    val Unit6 = 1000000L
-    val dir0 = edges.selectExpr("cast(src as string) as src", "cast(dst as string) as dst")
-      .where(col("src").isNotNull && col("dst").isNotNull && col("src") =!= col("dst"))
-    val e = dir0.unionByName(dir0.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().cache()
-    val ecnt = e.count()
-    if (ecnt <= maxLocalEdges && fitsLocal(e, maxLocalEdges)) {
-      val es = e.collect().map(r => (r.getString(0), r.getString(1)))
-      e.unpersist(false)
-      val nodes = (es.map(_._1) ++ es.map(_._2)).distinct.sorted
-      val idx = new java.util.HashMap[String, Int](nodes.length * 2)
-      nodes.zipWithIndex.foreach { case (n, i) => idx.put(n, i) }
-      val m = es.length; val n = nodes.length
-      val srcI = new Array[Int](m); val dstI = new Array[Int](m)
-      var k = 0
-      while (k < m) { srcI(k) = idx.get(es(k)._1); dstI(k) = idx.get(es(k)._2); k += 1 }
-      var x = Array.fill(n)(Unit6)
-      for (_ <- 1 to iters) {
-        val nx = new Array[Long](n)
-        var j = 0
-        while (j < m) { nx(dstI(j)) += x(srcI(j)); j += 1 }
-        var t = 0L; var i = 0
-        while (i < n) { t += nx(i); i += 1 }
-        if (t != 0L) { i = 0; while (i < n) { nx(i) = nx(i) * Unit6 / t; i += 1 } }
-        x = nx
-      }
-      val spark = edges.sparkSession
-      import spark.implicits._
-      nodes.indices.map(i => (nodes(i), x(i))).toDF("node", "score_units")
-        .orderBy("node")
-    } else {
-      val nodes = e.select(col("src").as("node"))
-        .union(e.select(col("dst").as("node"))).distinct().cache()
-      var x = nodes.withColumn("s", lit(Unit6))
-      for (i <- 1 to iters) {
-        val raw = e.join(x.withColumnRenamed("node", "src"), "src")
-          .groupBy(col("dst").as("node")).agg(sum(col("s")).as("s"))
-        val t = raw.agg(sum(col("s")).as("t"))
-        x = nodes.join(raw, Seq("node"), "left")
-          .select(col("node"), coalesce(col("s"), lit(0L)).as("s"))
-          .crossJoin(broadcast(t))
-          .selectExpr("node",
-            "CASE WHEN t = 0 OR t IS NULL THEN s ELSE (s * 1000000) div t END as s")
-          .localCheckpoint(true)
-      }
-      x.select(col("node"), col("s").as("score_units")).orderBy("node")
-    }
+    val e = symmetric(edges).cache()
+    power(e, iters, fitsLocal(e, maxLocalEdges).ok, normalize, normalize)
   }
 
   /**
@@ -891,54 +915,17 @@ object GraphOps {
     require(iters >= 1 && iters <= 50, s"iters in [1,50]: $iters")
     require(alphaMicro >= 1 && alphaMicro < 1000000L,
       s"alphaMicro in [1, 1e6): $alphaMicro")
-    val Unit6 = 1000000L
-    val dir0 = edges.selectExpr("cast(src as string) as src", "cast(dst as string) as dst")
-      .where(col("src").isNotNull && col("dst").isNotNull && col("src") =!= col("dst"))
-    val e = dir0.unionByName(dir0.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().cache()
+    val e = symmetric(edges).cache()
     val maxDeg = e.groupBy(col("src")).agg(count(lit(1)).as("d"))
       .agg(coalesce(max(col("d")), lit(0L))).head().getLong(0)
-    require(alphaMicro * maxDeg < Unit6,
+    refuseUnless(alphaMicro * maxDeg < Unit6, e)(
       s"katzCentrality: alpha=${alphaMicro}e-6 × maxDegree=$maxDeg ≥ 1 — the " +
         "series diverges (need alpha < 1/maxDegree); lower alphaMicro")
-    val ecnt = e.count()
-    if (ecnt <= maxLocalEdges && fitsLocal(e, maxLocalEdges)) {
-      val es = e.collect().map(r => (r.getString(0), r.getString(1)))
-      e.unpersist(false)
-      val nodes = (es.map(_._1) ++ es.map(_._2)).distinct.sorted
-      val idx = new java.util.HashMap[String, Int](nodes.length * 2)
-      nodes.zipWithIndex.foreach { case (n, i) => idx.put(n, i) }
-      val m = es.length; val n = nodes.length
-      val srcI = new Array[Int](m); val dstI = new Array[Int](m)
-      var k = 0
-      while (k < m) { srcI(k) = idx.get(es(k)._1); dstI(k) = idx.get(es(k)._2); k += 1 }
-      var x = Array.fill(n)(Unit6)
-      for (_ <- 1 to iters) {
-        val nx = new Array[Long](n)
-        var j = 0
-        while (j < m) { nx(dstI(j)) += x(srcI(j)); j += 1 }
-        var i = 0
-        while (i < n) { nx(i) = nx(i) * alphaMicro / Unit6 + Unit6; i += 1 }
-        x = nx
-      }
-      val spark = edges.sparkSession
-      import spark.implicits._
-      nodes.indices.map(i => (nodes(i), x(i))).toDF("node", "score_units")
-        .orderBy("node")
-    } else {
-      val nodes = e.select(col("src").as("node"))
-        .union(e.select(col("dst").as("node"))).distinct().cache()
-      var x = nodes.withColumn("s", lit(Unit6))
-      for (i <- 1 to iters) {
-        val raw = e.join(x.withColumnRenamed("node", "src"), "src")
-          .groupBy(col("dst").as("node")).agg(sum(col("s")).as("s"))
-        x = nodes.join(raw, Seq("node"), "left")
-          .selectExpr("node",
-            s"(coalesce(s, 0L) * ${alphaMicro}L) div ${Unit6}L + ${Unit6}L as s")
-          .localCheckpoint(true)
-      }
-      x.select(col("node"), col("s").as("score_units")).orderBy("node")
-    }
+    // x ← (A·x · alphaMicro) div 1e6 + β
+    power(e, iters, fitsLocal(e, maxLocalEdges).ok,
+      _.map(v => v * alphaMicro / Unit6 + Unit6),
+      onNodes(_, _).selectExpr("node",
+        s"(s * ${alphaMicro}L) div ${Unit6}L + ${Unit6}L as s"))
   }
 
   /**
@@ -963,39 +950,19 @@ object GraphOps {
       maxDegree: Long = 100000L): DataFrame = {
     require(topK >= 1, "topK >= 1")
     require(maxDegree >= 2, "maxDegree >= 2")
-    val dir0 = edges.selectExpr("cast(src as string) as src", "cast(dst as string) as dst")
-      .where(col("src").isNotNull && col("dst").isNotNull && col("src") =!= col("dst"))
-    val sym = dir0.unionByName(dir0.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().cache()
-    val deg = sym.groupBy(col("src").as("z")).agg(count(lit(1)).as("deg"))
-    val worstDeg = deg.agg(coalesce(max(col("deg")), lit(0L))).head().getLong(0)
-    require(worstDeg <= maxDegree,
-      s"linkPredict: max node degree $worstDeg > maxDegree=$maxDegree — the wedge " +
-        "join is Sum(deg^2); degree-cap-prefilter the edge list or raise the bound")
-    val nbr = sym.select(col("src").as("z"), col("dst").as("n"))
-    val wedges = nbr.select(col("z"), col("n").as("u"))
-      .join(nbr.select(col("z"), col("n").as("w")), "z")
-      .where(col("u") < col("w"))
-    val canon = sym.where(col("src") < col("dst"))
-      .select(col("src").as("u"), col("dst").as("w"))
-    val du = deg.select(col("z").as("u"), col("deg").as("__du"))
-    val dw = deg.select(col("z").as("w"), col("deg").as("__dw"))
-    val out = wedges.join(deg, "z")
-      .groupBy(col("u"), col("w"))
-      .agg(count(lit(1)).as("n_common"),
+    linkScores(edges, maxDegree, "linkPredict",
         sum(round(lit(1.0) / col("deg").cast("double"), 12)
-          .cast("decimal(24,12)")).as("__ra"))
-      .join(canon, Seq("u", "w"), "left_anti")
-      .join(broadcast(du), "u").join(broadcast(dw), "w")
-      .withColumn("jaccard", round(col("n_common").cast("double")
-        / (col("__du") + col("__dw") - col("n_common")).cast("double"), 6))
-      .orderBy(col("jaccard").desc, col("u").asc, col("w").asc)
-      .limit(topK)
-      .select(col("u").as("node_a"), col("w").as("node_b"), col("n_common"),
-        col("jaccard"), round(col("__ra").cast("double"), 6).as("ra_score"))
-      .localCheckpoint(true) // <= topK rows — materialize, then free sym
-    sym.unpersist(false)
-    out
+          .cast("decimal(24,12)")).as("__ra")) { (cand, deg) =>
+      val du = deg.select(col("z").as("u"), col("deg").as("__du"))
+      val dw = deg.select(col("z").as("w"), col("deg").as("__dw"))
+      cand.join(broadcast(du), "u").join(broadcast(dw), "w")
+        .withColumn("jaccard", round(col("n_common").cast("double")
+          / (col("__du") + col("__dw") - col("n_common")).cast("double"), 6))
+        .orderBy(col("jaccard").desc, col("u").asc, col("w").asc)
+        .limit(topK)
+        .select(col("u").as("node_a"), col("w").as("node_b"), col("n_common"),
+          col("jaccard"), round(col("__ra").cast("double"), 6).as("ra_score"))
+    }
   }
 
   /**
@@ -1024,10 +991,7 @@ object GraphOps {
   def apspStats(edges: DataFrame, maxHops: Int = 64,
       maxLocalEdges: Long = 4000000L): DataFrame = {
     require(maxHops >= 1, "maxHops >= 1")
-    val dir0 = edges.selectExpr("cast(src as string) as src", "cast(dst as string) as dst")
-      .where(col("src").isNotNull && col("dst").isNotNull && col("src") =!= col("dst"))
-    val e = dir0.unionByName(dir0.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().cache()
+    val e = symmetric(edges).cache()
     val spark = edges.sparkSession
     import spark.implicits._
     // dists: (d) one row per ordered reachable pair, d >= 1
@@ -1044,55 +1008,14 @@ object GraphOps {
             / col("n_reachable").cast("double"), 6)).as("mean_dist"),
           round(coalesce(col("__se").cast("double"), lit(0.0))
             / lit((nNodes * (nNodes - 1)).toDouble), 6).as("efficiency"))
-    if (fitsLocal(e, maxLocalEdges)) {
-      val es = e.collect().map(r => (r.getString(0), r.getString(1)))
-      e.unpersist(false)
-      val nodes = (es.map(_._1) ++ es.map(_._2)).distinct.sorted
-      val idx = new java.util.HashMap[String, Int](nodes.length * 2)
-      nodes.zipWithIndex.foreach { case (n, i) => idx.put(n, i) }
-      val n = nodes.length
-      val adj = Array.fill(n)(List.empty[Int])
-      es.foreach { case (s, d) => val i = idx.get(s); adj(i) = idx.get(d) :: adj(i) }
+    if (fitsLocal(e, maxLocalEdges).ok) {
+      val g = collectGraph(e)
       val ds = List.newBuilder[Long]
-      val dist = new Array[Int](n)
-      val queue = new Array[Int](n)
-      var s0 = 0
-      while (s0 < n) {
-        java.util.Arrays.fill(dist, -1)
-        dist(s0) = 0; queue(0) = s0
-        var head = 0; var tail = 1
-        while (head < tail) {
-          val u = queue(head); head += 1
-          val du = dist(u)
-          if (du < maxHops) adj(u).foreach { w =>
-            if (dist(w) < 0) { dist(w) = du + 1; queue(tail) = w; tail += 1 }
-          }
-        }
-        var i = 0
-        while (i < n) { if (i != s0 && dist(i) > 0) ds += dist(i).toLong; i += 1 }
-        s0 += 1
-      }
-      assemble(ds.result().toDF("d"), n.toLong)
+      hopsLocal(g, maxHops, 0 until g.n)((_, _, d) => ds += d.toLong)
+      assemble(ds.result().toDF("d"), g.n.toLong)
     } else {
       val nNodes = e.select(col("src")).distinct().count()
-      // distributed frontier iteration: dist(src, node) relaxes via
-      // min(dist, neighbor + 1) per round, lineage cut each round
-      var dist = e.select(col("src"), col("dst").as("node"), lit(1L).as("d"))
-        .distinct().localCheckpoint(true)
-      var round = 1
-      var grew = true
-      while (grew && round < maxHops) {
-        val next = dist.join(e.withColumnRenamed("src", "node"), "node")
-          .select(col("src"), col("dst").as("node"), (col("d") + 1L).as("d"))
-          .where(col("src") =!= col("node"))
-          .unionByName(dist)
-          .groupBy(col("src"), col("node")).agg(min(col("d")).as("d"))
-          .localCheckpoint(true)
-        grew = next.count() > dist.count()
-        dist = next
-        round += 1
-      }
-      val out = assemble(dist.select(col("d")), nNodes)
+      val out = assemble(hopsDist(e, maxHops).select(col("d")), nNodes)
         .localCheckpoint(true)
       e.unpersist(false)
       out
@@ -1115,17 +1038,11 @@ object GraphOps {
    * nodes_a, nodes_b).
    */
   def edgeChurn(edgesA: DataFrame, edgesB: DataFrame): DataFrame = {
-    def canon(df: DataFrame): DataFrame =
-      df.selectExpr("cast(src as string) as src", "cast(dst as string) as dst")
-        .where(col("src").isNotNull && col("dst").isNotNull && col("src") =!= col("dst"))
-        .selectExpr("least(src, dst) as a", "greatest(src, dst) as b")
-        .distinct()
-    val ca = canon(edgesA).localCheckpoint(true)
-    val cb = canon(edgesB).localCheckpoint(true)
-    val nodesA = ca.select(col("a")).unionByName(ca.select(col("b").as("a")))
-      .distinct().count()
-    val nodesB = cb.select(col("a")).unionByName(cb.select(col("b").as("a")))
-      .distinct().count()
+    val ca = undirected(edgesA).localCheckpoint(true)
+    val cb = undirected(edgesB).localCheckpoint(true)
+    def nodeCount(c: DataFrame): Long =
+      c.select(col("a")).unionByName(c.select(col("b").as("a"))).distinct().count()
+    val (nodesA, nodesB) = (nodeCount(ca), nodeCount(cb))
     val j = ca.withColumn("__ia", lit(1L))
       .join(cb.withColumn("__ib", lit(1L)), Seq("a", "b"), "full_outer")
       .agg(
@@ -1162,10 +1079,9 @@ object GraphOps {
     require(ks.nonEmpty && ks.size <= 16 && ks.forall(_ >= 0),
       "richClub: 1..16 non-negative thresholds")
     val spine = ks.distinct.sorted
-    val dir0 = edges.selectExpr("cast(src as string) as src", "cast(dst as string) as dst")
-      .where(col("src").isNotNull && col("dst").isNotNull && col("src") =!= col("dst"))
-    val sym = dir0.unionByName(dir0.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().cache()
+    // checkpointed, not cached: the returned plan still reads sym (via
+    // eAt), so its lifetime must cover the caller's action
+    val sym = symmetric(edges).localCheckpoint(true)
     val deg = sym.groupBy(col("src").as("nd")).agg(count(lit(1)).as("deg"))
       .localCheckpoint(true)
     val nCols = spine.map(k =>
@@ -1178,7 +1094,6 @@ object GraphOps {
     val eCols = spine.map(k =>
       sum(when(col("__md") > k, 1L).otherwise(0L)).as(s"e_$k"))
     val eAt = und.agg(eCols.head, eCols.tail: _*)
-    sym.unpersist(false)
     val spark = edges.sparkSession
     import spark.implicits._
     val kDf = spine.toDF("k")
@@ -1215,10 +1130,7 @@ object GraphOps {
    */
   def hubRemovalRobustness(edges: DataFrame, removeTop: Int): DataFrame = {
     require(removeTop >= 0, "removeTop >= 0")
-    val dir0 = edges.selectExpr("cast(src as string) as src", "cast(dst as string) as dst")
-      .where(col("src").isNotNull && col("dst").isNotNull && col("src") =!= col("dst"))
-    val sym = dir0.unionByName(dir0.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().cache()
+    val sym = symmetric(edges).cache()
     val deg = sym.groupBy(col("src").as("nd")).agg(count(lit(1)).as("deg"))
       .localCheckpoint(true)
     val nNodes = deg.count()
@@ -1250,23 +1162,6 @@ object GraphOps {
   }
 
   /**
-   * Newman modularity of a node partition: Q = Σ_c (e_c/m − (d_c/2m)²)
-   * — the fraction of edges inside communities minus the fraction a
-   * degree-preserving random rewire would put there (Newman & Girvan
-   * 2004). THE number that says whether labelPropagation (or any
-   * clustering) found real structure: Q ≈ 0 is random, ≥ ~0.3 is
-   * conventionally "has communities".
-   *
-   * Exact integer assembly: with m = |undirected edges|, e_c = within-
-   * community edge counts and d_c = community degree sums are exact
-   * longs, and Q = (4m·Σe_c − Σd_c²) / (4m²) is ONE double divide of an
-   * exact DECIMAL(38,0) numerator — engine-portable, 6dp. Shape: one
-   * label join onto each edge endpoint (node-keyed), one community
-   * rollup — |labels| rows, never pairs.
-   *
-   * Output: one row (m, n_communities, within_edges, q).
-   */
-  /**
    * Exact per-node closeness + harmonic centrality — the node-level
    * read [[apspStats]] aggregates away and [[landmarkCloseness]] only
    * approximates: who sits CLOSE to everything. Per node v over the
@@ -1288,10 +1183,7 @@ object GraphOps {
   def closenessExact(edges: DataFrame, maxHops: Int = 24,
       maxLocalEdges: Long = 4000000L): DataFrame = {
     require(maxHops >= 1 && maxHops <= 64, s"maxHops in [1,64]: $maxHops")
-    val dir0 = edges.selectExpr("cast(src as string) as src", "cast(dst as string) as dst")
-      .where(col("src").isNotNull && col("dst").isNotNull && col("src") =!= col("dst"))
-    val e = dir0.unionByName(dir0.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().cache()
+    val e = symmetric(edges).cache()
     val spark = edges.sparkSession
     import spark.implicits._
     def assemble(pairs: DataFrame): DataFrame =
@@ -1304,55 +1196,14 @@ object GraphOps {
           round(col("total_dist").cast("double")
             / col("n_reach").cast("double"), 6).as("mean_dist"),
           round(col("__h").cast("double"), 6).as("harmonic"))
-    if (fitsLocal(e, maxLocalEdges)) {
-      val es = e.collect().map(r => (r.getString(0), r.getString(1)))
-      e.unpersist(false)
-      val nodes = (es.map(_._1) ++ es.map(_._2)).distinct.sorted
-      val idx = new java.util.HashMap[String, Int](nodes.length * 2)
-      nodes.zipWithIndex.foreach { case (n, i) => idx.put(n, i) }
-      val n = nodes.length
-      val adj = Array.fill(n)(List.empty[Int])
-      es.foreach { case (s, d) => val i = idx.get(s); adj(i) = idx.get(d) :: adj(i) }
+    if (fitsLocal(e, maxLocalEdges).ok) {
+      val g = collectGraph(e)
       val out = List.newBuilder[(String, Long)]
-      val dist = new Array[Int](n)
-      val queue = new Array[Int](n)
-      var s0 = 0
-      while (s0 < n) {
-        java.util.Arrays.fill(dist, -1)
-        dist(s0) = 0; queue(0) = s0
-        var head = 0; var tail = 1
-        while (head < tail) {
-          val u = queue(head); head += 1
-          val du = dist(u)
-          if (du < maxHops) adj(u).foreach { w =>
-            if (dist(w) < 0) { dist(w) = du + 1; queue(tail) = w; tail += 1 }
-          }
-        }
-        var i = 0
-        while (i < n) {
-          if (i != s0 && dist(i) > 0) out += ((nodes(s0), dist(i).toLong))
-          i += 1
-        }
-        s0 += 1
-      }
+      hopsLocal(g, maxHops, 0 until g.n)((s0, _, d) =>
+        out += ((g.nodes(s0), d.toLong)))
       assemble(out.result().toDF("src", "d"))
     } else {
-      var dist = e.select(col("src"), col("dst").as("node"), lit(1L).as("d"))
-        .distinct().localCheckpoint(true)
-      var round0 = 1
-      var grew = true
-      while (grew && round0 < maxHops) {
-        val next = dist.join(e.withColumnRenamed("src", "node"), "node")
-          .select(col("src"), col("dst").as("node"), (col("d") + 1L).as("d"))
-          .where(col("src") =!= col("node"))
-          .unionByName(dist)
-          .groupBy(col("src"), col("node")).agg(min(col("d")).as("d"))
-          .localCheckpoint(true)
-        grew = next.count() > dist.count()
-        dist = next
-        round0 += 1
-      }
-      val out = assemble(dist).localCheckpoint(true)
+      val out = assemble(hopsDist(e, maxHops)).localCheckpoint(true)
       e.unpersist(false)
       out
     }
@@ -1412,23 +1263,14 @@ object GraphOps {
     require(maxHops >= 1 && maxHops <= 64, s"maxHops in [1,64]: $maxHops")
     require(sources.forall(_.nonEmpty), "sources: empty pivot set")
     val pivots = sources.map(_.distinct.toSet)
-    val dir0 = edges.selectExpr("cast(src as string) as src", "cast(dst as string) as dst")
-      .where(col("src").isNotNull && col("dst").isNotNull && col("src") =!= col("dst"))
-    val e = dir0.unionByName(dir0.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().cache()
+    val e = symmetric(edges).cache()
     val spark = edges.sparkSession
     // σ product bound: term = σ·σ·1e9 must fit a long on BOTH engines
     val MaxSigma = 95000L
-    if (fitsLocal(e, maxLocalEdges) &&
+    if (fitsLocal(e, maxLocalEdges).ok &&
         e.select(col("src")).distinct().count() <= maxLocalNodes) {
-      val es = e.collect().map(r => (r.getString(0), r.getString(1)))
-      e.unpersist(false)
-      val nodes = (es.map(_._1) ++ es.map(_._2)).distinct.sorted
-      val idx = new java.util.HashMap[String, Int](nodes.length * 2)
-      nodes.zipWithIndex.foreach { case (n, i) => idx.put(n, i) }
-      val n = nodes.length
-      val adj = Array.fill(n)(List.empty[Int])
-      es.foreach { case (s, d) => val i = idx.get(s); adj(i) = idx.get(d) :: adj(i) }
+      val g = collectGraph(e)
+      val (nodes, n, adj) = (g.nodes, g.n, g.adj)
       // dist/sigma per source — same level-synchronous BFS as the
       // distributed branch (σ sums over level-(k−1) neighbors)
       val dist = Array.ofDim[Int](n, n)
@@ -1564,10 +1406,7 @@ object GraphOps {
   def kTruss(edges: DataFrame, k: Int, maxRounds: Int = 6): DataFrame = {
     require(k >= 3, s"k >= 3: $k")
     require(maxRounds >= 1 && maxRounds <= 30, s"maxRounds in [1,30]: $maxRounds")
-    val dir0 = edges.selectExpr("cast(src as string) as src", "cast(dst as string) as dst")
-      .where(col("src").isNotNull && col("dst").isNotNull && col("src") =!= col("dst"))
-    var cur = dir0.selectExpr("least(src, dst) as a", "greatest(src, dst) as b")
-      .distinct().localCheckpoint(true)
+    var cur = undirected(edges).localCheckpoint(true)
     def support(canon: DataFrame): DataFrame = {
       val sym = canon.select(col("a").as("src"), col("b").as("dst"))
         .unionByName(canon.select(col("b").as("src"), col("a").as("dst")))
@@ -1700,10 +1539,7 @@ object GraphOps {
   def spectralGap(edges: DataFrame, iters: Int = 8,
       maxLocalEdges: Long = 1000000L): DataFrame = {
     require(iters >= 1 && iters <= 30, s"iters in [1,30]: $iters")
-    val dir0 = edges.selectExpr("cast(src as string) as src", "cast(dst as string) as dst")
-      .where(col("src").isNotNull && col("dst").isNotNull && col("src") =!= col("dst"))
-    val e = dir0.unionByName(dir0.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().cache()
+    val e = symmetric(edges).cache()
     val nodes = e.select(col("src").as("node")).distinct().cache()
     val n = nodes.count()
     require(n >= 2, "spectralGap: need at least two nodes")
@@ -1716,16 +1552,10 @@ object GraphOps {
     // over the collected adjacency — derived analytics graphs are
     // usually threshold-survivors, and 2·iters rounds of tiny Spark
     // jobs cost more scheduling than the whole computation
-    if (fitsLocal(e, maxLocalEdges)) {
-      val es = e.collect().map(r => (r.getString(0), r.getString(1)))
-      nodes.unpersist(false); e.unpersist(false)
-      val names = (es.map(_._1) ++ es.map(_._2)).distinct.sorted
-      val idx = names.zipWithIndex.toMap
-      val nn = names.length
-      val adj = Array.fill(nn)(List.empty[Int])
-      es.foreach { case (s0, d0) =>
-        val i = idx(s0); adj(i) = idx(d0) :: adj(i)
-      }
+    if (fitsLocal(e, maxLocalEdges).ok) {
+      nodes.unpersist(false)
+      val g = collectGraph(e)
+      val (nn, adj) = (g.n, g.adj)
       def d12(x: Double): BigDecimal =
         BigDecimal(x).setScale(12, BigDecimal.RoundingMode.HALF_UP)
       def matvecL(x: Array[Double]): Array[Double] =
@@ -1849,17 +1679,14 @@ object GraphOps {
    */
   def moranI(edges: DataFrame, attrs: DataFrame,
       nodeCol: String = "node", valueCol: String = "x"): DataFrame = {
-    val dir0 = edges.selectExpr("cast(src as string) as src", "cast(dst as string) as dst")
-      .where(col("src").isNotNull && col("dst").isNotNull && col("src") =!= col("dst"))
-    val e = dir0.unionByName(dir0.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().cache()
+    val e = symmetric(edges).cache()
     val nodes = e.select(col("src").as("nd")).distinct()
     val at = attrs.select(col(nodeCol).cast("string").as("nd"),
         col(valueCol).cast("long").as("x"))
       .where(col("nd").isNotNull && col("x").isNotNull)
     val joined = nodes.join(at, Seq("nd"), "left").cache()
     val missing = joined.where(col("x").isNull).count()
-    require(missing == 0,
+    refuseUnless(missing == 0, e, joined)(
       s"moranI: $missing graph node(s) lack an attribute value — a " +
         "silent zero would fabricate anti-correlation; supply or filter")
     def d(c: Column): Column = c.cast("decimal(38,0)")
@@ -1885,13 +1712,27 @@ object GraphOps {
     Seq((n, w, i, ei)).toDF("n_nodes", "w_edges", "moran_i", "expected_i")
   }
 
+  /**
+   * Newman modularity of a node partition: Q = Σ_c (e_c/m − (d_c/2m)²)
+   * — the fraction of edges inside communities minus the fraction a
+   * degree-preserving random rewire would put there (Newman & Girvan
+   * 2004). THE number that says whether labelPropagation (or any
+   * clustering) found real structure: Q ≈ 0 is random, ≥ ~0.3 is
+   * conventionally "has communities".
+   *
+   * Exact integer assembly: with m = |undirected edges|, e_c = within-
+   * community edge counts and d_c = community degree sums are exact
+   * longs, and Q = (4m·Σe_c − Σd_c²) / (4m²) is ONE double divide of an
+   * exact DECIMAL(38,0) numerator — engine-portable, 6dp. Shape: one
+   * label join onto each edge endpoint (node-keyed), one community
+   * rollup — |labels| rows, never pairs.
+   *
+   * Output: one row (m, n_communities, within_edges, q).
+   */
   def modularity(edges: DataFrame, labels: DataFrame,
       nodeCol: String = "node", labelCol: String = "label"): DataFrame = {
-    val dir0 = edges.selectExpr("cast(src as string) as src", "cast(dst as string) as dst")
-      .where(col("src").isNotNull && col("dst").isNotNull && col("src") =!= col("dst"))
     // canonical undirected edge list, each edge ONCE
-    val und = dir0.selectExpr("least(src, dst) as a", "greatest(src, dst) as b")
-      .distinct().cache()
+    val und = undirected(edges).cache()
     val lab = labels.select(col(nodeCol).cast("string").as("nd"),
       col(labelCol).cast("string").as("lb"))
     val tagged = und

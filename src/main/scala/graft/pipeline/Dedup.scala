@@ -533,6 +533,16 @@ object Dedup {
 
   // ---------- cluster-level dedup (connected components) ----------
 
+  /** Distributed-loop round count of the LAST [[connectedComponents]]
+    * call on this thread (0 = the driver union-find fast path answered;
+    * the fused seed round is not counted; the count includes the final
+    * no-change confirmation round). Instrumentation only — feeds the
+    * rounds-vs-n decomposition (`cc_rounds`) of [[graft.Rehearse]]'s
+    * `density` family: at constant density an O(log n) round count with
+    * per-round linear cost is the designed shape, and this is the number
+    * that proves it. */
+  val lastCcRounds = new ThreadLocal[Int] { override def initialValue(): Int = 0 }
+
   /**
    * Connected components over an undirected edge list (near-dup pairs from
    * `minhashPairs` / `jaccardPairs` / `simhashPairs` / `cosinePairsLsh`)
@@ -561,16 +571,6 @@ object Dedup {
    * the iterative rounds are pure job overhead at that size. Set 0 to
    * force the distributed loop.
    */
-  /** Distributed-loop round count of the LAST [[connectedComponents]]
-    * call on this thread (0 = the driver union-find fast path answered;
-    * the fused seed round is not counted; the count includes the final
-    * no-change confirmation round). Instrumentation only — feeds the
-    * rounds-vs-n decomposition (`cc_rounds`) of [[graft.Rehearse]]'s
-    * `density` family: at constant density an O(log n) round count with
-    * per-round linear cost is the designed shape, and this is the number
-    * that proves it. */
-  val lastCcRounds = new ThreadLocal[Int] { override def initialValue(): Int = 0 }
-
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
       maxIter: Int = 25, localSolveEdges: Long = 4_000_000L): DataFrame = {
     lastCcRounds.set(0)
@@ -588,7 +588,7 @@ object Dedup {
     // byte-aware second condition (GraphOps.fitsLocal): the row-count
     // cutover alone would collect 4M long-URL-keyed edges into a driver
     // OOM; the gate charges actual key bytes against a fixed budget
-    if (graft.operators.GraphOps.fitsLocal(edges, localSolveEdges)) {
+    if (graft.operators.GraphOps.fitsLocal(edges, localSolveEdges).ok) {
       val sch = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("id", pairs.schema(aCol).dataType),
         org.apache.spark.sql.types.StructField("component", pairs.schema(aCol).dataType)))

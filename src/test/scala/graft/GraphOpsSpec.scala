@@ -8,6 +8,18 @@ import graft.operators.{Association, GraphOps}
 class GraphOpsSpec extends SparkSpec {
   import spark.implicits._
 
+  /** Intercepts a refusal and asserts it left no persistent RDD behind.
+    * Only NEW ids count as a leak: the context cleaner may release an
+    * earlier test's garbage checkpoints while `body` runs. */
+  private def refusesWithoutLeak(body: => Any): IllegalArgumentException = {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val e = intercept[IllegalArgumentException](body)
+    val leaked = sc.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"refusal left persistent RDDs $leaked behind")
+    e
+  }
+
   test("Association.pairs: hand-checked support/conf/lift; multiplicity ignored") {
     val bi = Seq(
       (1, "a"), (1, "b"), (1, "c"), (1, "a"), // duplicate a must not inflate
@@ -110,20 +122,24 @@ class GraphOpsSpec extends SparkSpec {
     // 4 edges, tiny keys: inside both the row and byte budgets
     val small = Seq(("a", "b"), ("b", "c"), ("c", "d"), ("d", "a"))
       .toDF("src", "dst")
-    assert(GraphOps.fitsLocal(small, maxLocalEdges = 1000000L))
+    assert(GraphOps.fitsLocal(small, maxLocalEdges = 1000000L).ok)
     // same COUNT, fat keys: the byte estimate (chars×2 + 48/key) must
     // refuse what the row count would wave through — this is the
     // long-URL-id driver-OOM case the gate exists for
     val fat = Seq.tabulate(4)(i => ("u" * 200 + i, "v" * 200 + i))
       .toDF("src", "dst")
     assert(!GraphOps.fitsLocal(fat, maxLocalEdges = 1000000L,
-      maxBytes = 1024L))
-    assert(GraphOps.fitsLocal(fat, maxLocalEdges = 1000000L)) // default 512 MB fits
+      maxBytes = 1024L).ok)
+    assert(GraphOps.fitsLocal(fat, maxLocalEdges = 1000000L).ok) // default 512 MB fits
     // the row-count condition still binds independently
-    assert(!GraphOps.fitsLocal(small, maxLocalEdges = 2L))
+    assert(!GraphOps.fitsLocal(small, maxLocalEdges = 2L).ok)
     // non-string keys are charged via their string form, not rejected
     val ints = Seq((1, 2), (2, 3)).toDF("src", "dst")
-    assert(GraphOps.fitsLocal(ints, maxLocalEdges = 10L))
+    assert(GraphOps.fitsLocal(ints, maxLocalEdges = 10L).ok)
+    // the probe's own count is the relation's count, whichever regime it
+    // picks — callers use it instead of a second count() job
+    for (df <- Seq(small, fat, ints); cut <- Seq(0L, 2L, 1000000L))
+      assert(GraphOps.fitsLocal(df, maxLocalEdges = cut).edges == df.count())
     // regime flip on the byte axis is result-invariant (the standing
     // two-regime contract): force the distributed branch via bytes
     val edges = (1 to 40).map(i => (s"node_with_a_rather_long_identifier_$i",
@@ -238,10 +254,11 @@ class GraphOpsSpec extends SparkSpec {
     // star with center degree 5; edges spelled canonically (a < b) so the
     // same relation feeds both operators (triangles drops a >= b rows)
     val star = (1 to 5).map(i => (s"l$i", "z")).toDF("src", "dst")
-    intercept[IllegalArgumentException] {
+    // ...and each refusal releases its cached edge relation
+    refusesWithoutLeak {
       GraphOps.adamicAdar(star, maxDegree = 4).collect()
     }
-    intercept[IllegalArgumentException] {
+    refusesWithoutLeak {
       GraphOps.triangles(star, maxDegree = 4).collect()
     }
     // at the exact bound both run (refusal is strict >)
@@ -520,9 +537,15 @@ class GraphOpsSpec extends SparkSpec {
     // round 2: h = 3·1.1e6·0.1 + 1e6 = 1.33e6, leaf = 1.3e6·0.1 + 1e6
     val m = loc.toMap
     assert(m("h") == 1330000L && m("a") == 1130000L && m("a") == m("c"))
-    // α·maxDegree ≥ 1 → the series diverges → loud refusal
-    intercept[IllegalArgumentException] {
+    // α·maxDegree ≥ 1 → the series diverges → loud refusal, nothing leaked
+    refusesWithoutLeak {
       GraphOps.katzCentrality(star, alphaMicro = 500000L)
+    }
+    // the same on a graph no earlier call built: a relation another call
+    // left cached would be shared, hiding a leak from the key diff
+    refusesWithoutLeak {
+      GraphOps.katzCentrality(star.union(Seq(("h", "d")).toDF("src", "dst")),
+        alphaMicro = 500000L)
     }
   }
 
@@ -650,8 +673,8 @@ class GraphOpsSpec extends SparkSpec {
     // constant attribute: no variance → NULL I, counts still published
     val const = GraphOps.moranI(pair, attr("a" -> 5L, "b" -> 5L)).head()
     assert(const.isNullAt(2) && const.getAs[Long]("w_edges") == 2L)
-    // a graph node without an attribute refuses loudly
-    intercept[IllegalArgumentException] {
+    // a graph node without an attribute refuses loudly, nothing leaked
+    refusesWithoutLeak {
       GraphOps.moranI(islands, attr("a" -> 1L, "b" -> 1L, "c" -> 0L))
     }
   }
