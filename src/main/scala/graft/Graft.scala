@@ -80,19 +80,20 @@ final class Graft(
   private[graft] def managedPath(name: String, global: Boolean = false): String = {
     val w = warehouse.getOrElse(
       throw new IllegalStateException("engine has no warehouse configured for writes"))
-    val sp = if (global || registry.get(space, name).exists(_.isGlobal)) "global" else space
-    s"$w/$sp/$name"
+    s"$w/${if (global) "global" else spaceOf(name)}/$name"
   }
+
+  /** The space a table's data lives in: "global" for a global table. */
+  private def spaceOf(name: String): String =
+    if (registry.get(space, name).exists(_.isGlobal)) "global" else space
 
   /** Key for IdGen's in-process sequence state: scoped by PHYSICAL
     * location (same resolution as `managedPath` — global tables live under
     * `global/` and must share one sequence across every space that writes
     * them) so same-named tables in different warehouses/spaces never share
     * a sequence, while concurrent batches on ONE physical table always do. */
-  private def idScope(name: String): String = {
-    val sp = if (registry.get(space, name).exists(_.isGlobal)) "global" else space
-    s"${warehouse.getOrElse(dataDir)}/$sp/$name"
-  }
+  private def idScope(name: String): String =
+    s"${warehouse.getOrElse(dataDir)}/${spaceOf(name)}/$name"
 
   private def managedExists(name: String): Boolean =
     warehouse.exists { w =>
@@ -196,103 +197,58 @@ final class Graft(
     // overwrite): the update/insert split and the secondary-unique probe
     // READ the table — concurrent upserts must see each other's writes
     graft.write.Writes.singleTableFlow(managedPath(name)) {
-      batchUpsertLocked(name, rows, allowPartialErrors)
+      import org.apache.spark.sql.functions.{col => c, row_number}
+      val staged = stageRows(name, rows)
+      val ks = registry.get(space, name).map(_.uniqueKeySets.head).getOrElse(
+        throw new IllegalArgumentException(
+          "batchUpsert needs a registered schema with a unique key (tostore.dart:637)"))
+      val (good, failed) = validateStaged(name, staged, Some(ks))
+      val failedCount = failed.count()
+      refuseInvalid("batchUpsert", failedCount, allowPartialErrors)
+      val successCount = rows.size.toLong - failedCount
+      // an all-rejected batch must not rewrite the table or publish a phantom
+      // upsert ChangeEvent (mirrors the ingestStaged successCount guard)
+      if (successCount > 0) {
+        // within-batch duplicate MERGE keys: the last occurrence wins
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy(ks.map(c): _*).orderBy(c("__row_idx").desc)
+        val deduped = good.withColumn("__rn", row_number().over(w))
+          .where(c("__rn") === 1).drop("__rn" +: Graft.Carriers: _*)
+        graft.write.Writes.overwrite(this, name,
+          graft.write.Writes.upsertMerge(table(name), deduped, ks), op = "upsert")
+      }
+      graft.write.WriteReport(successCount, failedCount, failed)
     }
 
-  private def batchUpsertLocked(name: String, rows: Seq[Map[String, Any]],
-      allowPartialErrors: Boolean): graft.write.WriteReport = {
-    import org.apache.spark.sql.functions.{col => c, row_number}
-    import org.apache.spark.sql.expressions.Window
-    val staged = stageRows(name, rows)
-    val regSchema = registry.get(space, name)
-    val ks = regSchema.map(_.uniqueKeySets.head).getOrElse(
-      throw new IllegalArgumentException(
-        "batchUpsert needs a registered schema with a unique key (tostore.dart:637)"))
-    val schema = regSchema.map(_.sparkSchema).getOrElse(table(name).schema)
-    val notNull = schema.fields.filterNot(_.nullable).map(_.name).toSeq
-    val carriers = Seq("__parse_ok", "__row_idx")
-    // parse/constraint checks apply to every row; NULLABILITY applies to
-    // INSERT rows only — a partial update row stages its absent fields as
-    // null and upsertMerge coalesces them to the existing values
-    val checks = c("__parse_ok") +:
-      regSchema.map(s => graft.write.Writes.constraintChecks(s.fields)).getOrElse(Nil)
-    val (parseGood, parseBad) = graft.write.Writes.validateRows(staged, Nil, checks)
-    lazy val existingNonEmpty = managedExists(name) && !table(name).isEmpty
-    val (updates, inserts) =
-      if (existingNonEmpty) {
-        val existKeys = table(name).select(ks.map(c): _*)
-        (parseGood.join(existKeys, ks, "left_semi"),
-          parseGood.join(existKeys, ks, "left_anti"))
-      } else (parseGood.limit(0), parseGood)
-    val (insGood, insBad) = graft.write.Writes.validateRows(inserts, notNull)
-    var good = updates.unionByName(insGood)
-    var bads = List(parseBad, insBad)
-    // SECONDARY unique key sets (beyond the merge key) stay enforced, with
-    // the reference's sequential-apply semantics: within a batch the FIRST
-    // occurrence claims the secondary key, and a later row is a collision
-    // only when its MERGE key differs (a row re-updating the same record
-    // with the same email is a supersede, not a violation — it stays in
-    // the batch and the last-wins merge dedup below picks it). A collision
-    // with an EXISTING row under a DIFFERENT merge key is rejected (same
-    // merge key IS the row being updated — not a collision).
-    //
-    // KNOWN DIVERGENCE (set-based vs truly sequential): a secondary key
-    // FREED mid-batch (its owner re-keyed by an earlier row) is not
-    // reclaimable by a later row in the SAME batch — the window sees the
-    // original owner and rejects the claim the reference would accept.
-    // Split such flows into two batches. (Same family as the loose-join
-    // divergence documented in COVERAGE.md.)
-    regSchema.toSeq.flatMap(_.uniqueKeySets.distinct).filterNot(_ == ks).foreach { uks =>
-      if (uks.forall(staged.columns.contains)) {
-        import org.apache.spark.sql.functions.first
-        val keyNotNull = uks.map(c(_).isNotNull).reduce(_ && _)
-        val w = Window.partitionBy(uks.map(c): _*).orderBy(c("__row_idx"))
-        val marked = ks.foldLeft(good.withColumn("__rn", row_number().over(w))) {
-          (df, k) => df.withColumn("__fk_" + k, first(c(k)).over(w))
-        }
-        val sameMergeAsFirst = ks.map(k => c(k) <=> c("__fk_" + k)).reduce(_ && _)
-        val helpers = "__rn" +: ks.map("__fk_" + _)
-        bads ::= marked.where(keyNotNull && c("__rn") > 1 && !sameMergeAsFirst)
-          .drop(helpers: _*)
-        good = marked.where(!keyNotNull || c("__rn") === 1 || sameMergeAsFirst)
-          .drop(helpers: _*)
-        if (existingNonEmpty) {
-          val exCols = (uks ++ ks).distinct
-          val existing = table(name).select(exCols.map(c): _*)
-            .toDF(exCols.map("__ex_" + _): _*)
-          val on = uks.map(k => c(k) <=> c("__ex_" + k)).reduce(_ && _) &&
-            keyNotNull && ks.map(k => !(c(k) <=> c("__ex_" + k))).reduce(_ || _)
-          bads ::= good.join(existing, on, "left_semi")
-          good = good.join(existing, on, "left_anti")
-        }
-      }
-    }
-    val failedSnap = bads.reduce(_ unionByName _).dropDuplicates("__row_idx")
-      .drop(carriers: _*).localCheckpoint(true)
-    val failedCount = failedSnap.count()
+  private def refuseInvalid(op: String, failedCount: Long,
+      allowPartialErrors: Boolean): Unit =
     if (!allowPartialErrors && failedCount > 0)
       throw new IllegalArgumentException(
-        s"batchUpsert: $failedCount invalid row(s); pass allowPartialErrors to skip them")
-    val successCount = rows.size.toLong - failedCount
-    // an all-rejected batch must not rewrite the table or publish a phantom
-    // upsert ChangeEvent (mirrors the ingestStaged successCount guard)
-    if (successCount > 0) {
-      // within-batch duplicate MERGE keys: the last occurrence wins
-      val w2 = Window.partitionBy(ks.map(c): _*).orderBy(c("__row_idx").desc)
-      val deduped = good.withColumn("__rn", row_number().over(w2))
-        .where(c("__rn") === 1).drop("__rn").drop(carriers: _*)
-      graft.write.Writes.overwrite(this, name,
-        graft.write.Writes.upsertMerge(table(name), deduped, ks), op = "upsert")
-    }
-    graft.write.WriteReport(successCount, failedCount, failedSnap)
-  }
+        s"$op: $failedCount invalid row(s); pass allowPartialErrors to skip them")
+
+  /** The declared schema of a registered table, else the stored one. */
+  private def targetSchema(name: String): org.apache.spark.sql.types.StructType =
+    registry.get(space, name).map(_.sparkSchema).getOrElse(table(name).schema)
+
+  /** Fields a row gets the current timestamp for when it omits them. */
+  private def defaultNowFields(name: String): Set[String] =
+    registry.get(space, name).map(_.fields).getOrElse(Nil)
+      .filter(_.defaultCurrentTimestamp).map(_.name).toSet
+
+  /** The base generated PKs continue from: the stored max of a sequential
+    * PK, 0 for other strategies or a never-written table. */
+  private def pkBase(name: String, pk: graft.schema.PrimaryKeyConfig): Long =
+    if (pk.strategy == graft.schema.PkStrategy.Sequential && managedExists(name)) {
+      import org.apache.spark.sql.functions.{col, max}
+      Option(table(name).agg(max(col(pk.name).cast("long"))).head.get(0))
+        .map(_.asInstanceOf[Long]).getOrElse(0L)
+    } else 0L
 
   /** Shared staging of loosely-typed map rows: PK generation + per-value
     * coercion to the declared schema, flagged (never thrown) failures,
     * batch row ordinal. Output carries `__parse_ok` + `__row_idx`. */
   private def stageRows(name: String, rows: Seq[Map[String, Any]]): DataFrame = {
-    val schema = registry.get(space, name).map(_.sparkSchema)
-      .getOrElse(table(name).schema)
+    val schema = targetSchema(name)
     // loose typing (FieldSchema.convertValue, table_schema.dart:1356-1446):
     // values are coerced to the declared column type before encoding
     import org.apache.spark.sql.types._
@@ -311,8 +267,7 @@ final class Graft(
       case (s: String, TimestampType)  => java.sql.Timestamp.valueOf(s)
       case (x, _)                      => x
     }
-    val defaultNow = registry.get(space, name).map(_.fields).getOrElse(Nil)
-      .filter(_.defaultCurrentTimestamp).map(_.name).toSet
+    val defaultNow = defaultNowFields(name)
     // PK generation for rows that don't carry one (reference: generator
     // strategies sequential/timestampBased/datePrefixed/shortCode,
     // id_generator.dart; wired at insert, data_store_impl.dart:1527)
@@ -324,14 +279,8 @@ final class Graft(
         }
         if (missing.isEmpty) rows
         else {
-          val existingMax =
-            if (s.primaryKey.strategy == graft.schema.PkStrategy.Sequential && managedExists(name)) {
-              import org.apache.spark.sql.functions.{col => c, max => smax}
-              Option(table(name).agg(smax(c(pk).cast("long"))).head.get(0))
-                .map(_.asInstanceOf[Long]).getOrElse(0L)
-            } else 0L
           val ids = graft.schema.IdGen.generateFor(idScope(name), s.primaryKey.strategy,
-            missing.size, existingMax)
+            missing.size, pkBase(name, s.primaryKey))
           val patch = missing.zip(ids).toMap
           rows.zipWithIndex.map { case (m, i) =>
             patch.get(i).fold(m)(id => m + (pk -> id))
@@ -364,16 +313,8 @@ final class Graft(
   }
 
   /** Shared tail of the two ingest paths (`batchInsert`, `insertFrom`):
-    * `staged` carries the all-nullable target columns plus `__parse_ok`
-    * and `__row_idx`. Splits on nullability + declared constraints +
-    * uniqueness, appends the good rows, reports the bad ones.
-    *
-    * @param provablyUnique key sets whose within-batch uniqueness is
-    *        guaranteed by construction (e.g. a PK generated for EVERY row
-    *        from a reserved id block + distinct row indexes) — the
-    *        within-batch window check is skipped for them (a 10M-row
-    *        ingest must not shuffle on a key that cannot collide); the
-    *        existing-table anti-join still runs. */
+    * validates `staged` (see [[validateStaged]]), appends the good rows,
+    * reports the bad ones with bounded key lists. */
   private def ingestStaged(name: String, staged: DataFrame,
       allowPartialErrors: Boolean,
       provablyUnique: Set[Seq[String]] = Set.empty): graft.write.WriteReport =
@@ -382,91 +323,125 @@ final class Graft(
     // two concurrent batches carrying the same key would otherwise both
     // pass the check and both land
     graft.write.Writes.singleTableFlow(managedPath(name)) {
-      ingestStagedLocked(name, staged, allowPartialErrors, provablyUnique)
+      val (goodSnap, failedSnap) = validateStaged(name, staged, None, provablyUnique)
+      val pkOpt = registry.get(space, name).map(_.primaryKey.name)
+        .filter(staged.columns.contains)
+      def keysOf(df: DataFrame): Seq[String] = pkOpt.map(pk =>
+        df.select(df(pk).cast("string")).limit(graft.write.WriteReport.KeyListCap)
+          .collect().map(_.getString(0)).toSeq).getOrElse(Nil)
+      // when the bounded key collect came back under its cap it IS the exact
+      // row count — skip the separate count job (these report counts run on
+      // every insert; at gate grain the job overhead dominates the data)
+      def countVia(keys: Seq[String], df: DataFrame): Long =
+        if (pkOpt.isDefined && keys.size < graft.write.WriteReport.KeyListCap)
+          keys.size.toLong
+        else df.count()
+      val failedKeys = keysOf(failedSnap)
+      val failedCount = countVia(failedKeys, failedSnap)
+      refuseInvalid("batchInsert", failedCount, allowPartialErrors)
+      val goodKeys = keysOf(goodSnap)
+      val successCount = countVia(goodKeys, goodSnap)
+      // an all-rejected batch appends nothing — and must not publish a
+      // phantom "insert" ChangeEvent to watchers
+      if (successCount > 0)
+        graft.write.Writes.append(this, name, goodSnap.drop(Graft.Carriers: _*))
+      graft.write.WriteReport(successCount, failedCount, failedSnap,
+        goodKeys, failedKeys)
     }
 
-  private def ingestStagedLocked(name: String, staged: DataFrame,
-      allowPartialErrors: Boolean,
-      provablyUnique: Set[Seq[String]]): graft.write.WriteReport = {
-    val schema = registry.get(space, name).map(_.sparkSchema)
-      .getOrElse(table(name).schema)
-    val notNull = schema.fields.filterNot(_.nullable).map(_.name).toSeq
-    // declared constraints (maxLength/minLength/minValue/maxValue) join the
-    // parse check — the reference enforces them at insert time
-    // (table_schema.dart:1177-1216)
+  /** The one batch validation kernel of `batchInsert`, `insertFrom` and
+    * `batchUpsert` (reference: validate and coerce, re-check uniqueness,
+    * write — data_store_impl.dart:2342); callers hold the write stripe.
+    * `staged` carries the target columns plus the carriers. A row fails on
+    * parse, declared constraints (table_schema.dart:1177-1216), nullability
+    * or uniqueness (data_store_impl.dart:1527→2229): the first occurrence
+    * of a key in the batch wins, a key already stored is rejected (anti-
+    * join, no driver-side key lists), NULL keys never collide. Returns
+    * (surviving rows with carriers, failed rows without), both read from
+    * ONE localCheckpoint.
+    *
+    * Upsert passes its `mergeKey`: that set is not checked (duplicates are
+    * last-wins, a stored match an update), nullability binds only rows
+    * whose merge key is not stored yet (absent fields of an update
+    * coalesce to the stored values), and on other unique sets a row with
+    * the first occurrence's or the stored owner's merge key is a
+    * supersede, not a collision. Insert is the case "same merge key" =
+    * false. KNOWN DIVERGENCE from sequential apply: a secondary key freed
+    * mid-batch (its owner re-keyed by an earlier row) is not reclaimable
+    * in the same batch (same family as the loose-join divergence in
+    * COVERAGE.md); split such flows into two batches.
+    *
+    * @param provablyUnique key sets unique by construction (a PK generated
+    *        for EVERY row from a reserved block): no within-batch window
+    *        for them — a 10M-row ingest must not shuffle on a key that
+    *        cannot collide; the stored-key anti-join still runs. */
+  private def validateStaged(name: String, staged: DataFrame,
+      mergeKey: Option[Seq[String]],
+      provablyUnique: Set[Seq[String]] = Set.empty): (DataFrame, DataFrame) = {
+    import org.apache.spark.sql.functions.{col => c, first, lit, row_number}
+    import graft.write.Writes.validateRows
     val regSchema = registry.get(space, name)
-    val checks = org.apache.spark.sql.functions.col("__parse_ok") +:
+    val notNull = targetSchema(name).fields.filterNot(_.nullable).map(_.name).toSeq
+    val checks = c("__parse_ok") +:
       regSchema.map(s => graft.write.Writes.constraintChecks(s.fields)).getOrElse(Nil)
-    val (good0, bad0) = graft.write.Writes.validateRows(staged, notNull, checks)
-    // uniqueness (PK + unique indexes/fields, data_store_impl.dart:1527→2229):
-    // within-batch first occurrence wins; rows colliding with the existing
-    // table are rejected via anti-join (no driver-side key lists)
-    import org.apache.spark.sql.functions.{col => c, row_number}
-    var good = good0
-    var bads = List(bad0)
-    // one limit-1 probe decides whether the per-keyset existing-table
-    // anti/semi joins run at all — a bulk load into a fresh table must not
-    // shuffle the whole batch against an empty scan per unique key set
+    // one limit-1 probe decides whether the existing-table joins run at
+    // all — a bulk load into a fresh table must not shuffle the whole
+    // batch against an empty scan per unique key set
     lazy val existingNonEmpty = managedExists(name) && !table(name).isEmpty
-    regSchema.toSeq.flatMap(_.uniqueKeySets.distinct).foreach { ks =>
+    val mk = mergeKey.getOrElse(Nil)
+    // upsert rows whose merge key is stored are updates: no nullability
+    val storedKeys = mergeKey.filter(_ => existingNonEmpty)
+      .map(ks => table(name).select(ks.map(c): _*))
+    val (insGood, insBad) = validateRows(
+      storedKeys.fold(staged)(keys => staged.join(keys, mk, "left_anti")), notNull, checks)
+    var good = insGood
+    var bads = List(insBad)
+    storedKeys.foreach { keys =>
+      val (g, b) = validateRows(staged.join(keys, mk, "left_semi"), Nil, checks)
+      good = g.unionByName(good)
+      bads ::= b
+    }
+    regSchema.toSeq.flatMap(_.uniqueKeySets.distinct).filterNot(mergeKey.contains).foreach { ks =>
       if (ks.forall(staged.columns.contains)) {
-        // NULL keys never collide (SQL-standard unique): rows with any null
-        // key column bypass both the within-batch and existing-table checks
-        val keyNotNull = ks.map(c(_).isNotNull).reduce(_ && _)
         if (!provablyUnique.contains(ks)) {
+          val keyNotNull = ks.map(c(_).isNotNull).reduce(_ && _)
           val w = org.apache.spark.sql.expressions.Window
             .partitionBy(ks.map(c): _*).orderBy(c("__row_idx"))
-          val marked = good.withColumn("__rn", row_number().over(w))
-          bads ::= marked.where(keyNotNull && c("__rn") > 1).drop("__rn")
-          good = marked.where(!keyNotNull || c("__rn") === 1).drop("__rn")
+          val marked = mk.foldLeft(good.withColumn("__rn", row_number().over(w))) {
+            (df, k) => df.withColumn("__first_" + k, first(c(k)).over(w))
+          }
+          val sameAsFirst = mk.map(k => c(k) <=> c("__first_" + k))
+            .reduceOption(_ && _).getOrElse(lit(false))
+          val helpers = "__rn" +: mk.map("__first_" + _)
+          bads ::= marked.where(keyNotNull && c("__rn") > 1 && !sameAsFirst)
+            .drop(helpers: _*)
+          good = marked.where(!keyNotNull || c("__rn") === 1 || sameAsFirst)
+            .drop(helpers: _*)
         }
         if (existingNonEmpty) {
-          val existing = table(name).select(ks.map(c): _*)
-          bads ::= good.join(existing, ks, "left_semi")
-          good = good.join(existing, ks, "left_anti")
+          val exCols = (ks ++ mk).distinct
+          val stored = table(name).select(exCols.map(c): _*)
+            .toDF(exCols.map("__ex_" + _): _*)
+          val differs = mk.map(k => !(c(k) <=> c("__ex_" + k)))
+            .reduceOption(_ || _).getOrElse(lit(true))
+          val on = ks.map(k => c(k) === c("__ex_" + k)).reduce(_ && _) && differs
+          bads ::= good.join(stored, on, "left_semi")
+          good = good.join(stored, on, "left_anti")
         }
       }
     }
     // a row can trip several checks (e.g. two unique key sets, or parse +
     // collision) — dedupe by ordinal so failedCount counts ROWS, not reasons
     val bad = bads.reduce(_ unionByName _).dropDuplicates("__row_idx")
-    val carriers = Seq("__parse_ok", "__row_idx")
-    // ONE materialization job snapshots BOTH splits (each insert pays fixed
-    // per-action overhead, and this path runs per batch): flag, union,
-    // localCheckpoint — severing the file-listing lineage a later atomic
-    // swap would invalidate — then the report frames, the invalid-rows
-    // check, the key collects and the append all read the pinned result
-    // instead of re-running the validation pipeline (window dedup +
-    // anti-joins) once per action
-    val flagged = good.withColumn("__ok", org.apache.spark.sql.functions.lit(true))
-      .unionByName(bad.withColumn("__ok", org.apache.spark.sql.functions.lit(false)))
+    // ONE job snapshots BOTH splits; localCheckpoint severs the file
+    // lineage a later atomic swap would invalidate, and the counts, key
+    // lists and write read the pinned result instead of re-running the
+    // validation pipeline once per action
+    val flagged = good.withColumn("__ok", lit(true))
+      .unionByName(bad.withColumn("__ok", lit(false)))
       .localCheckpoint(true)
-    val goodSnap = flagged.where(c("__ok")).drop("__ok")
-    val failedSnap = flagged.where(!c("__ok")).drop("__ok").drop(carriers: _*)
-    val pkOpt = regSchema.map(_.primaryKey.name).filter(staged.columns.contains)
-    def keysOf(df: DataFrame): Seq[String] = pkOpt.map(pk =>
-      df.select(c(pk).cast("string")).limit(graft.write.WriteReport.KeyListCap)
-        .collect().map(_.getString(0)).toSeq).getOrElse(Nil)
-    // when the bounded key collect came back under its cap it IS the exact
-    // row count — skip the separate count job (these report counts run on
-    // every insert; at gate grain the job overhead dominates the data)
-    def countVia(keys: Seq[String], df: DataFrame): Long =
-      if (pkOpt.isDefined && keys.size < graft.write.WriteReport.KeyListCap)
-        keys.size.toLong
-      else df.count()
-    val failedKeys = keysOf(failedSnap)
-    val failedCount = countVia(failedKeys, failedSnap)
-    if (!allowPartialErrors && failedCount > 0)
-      throw new IllegalArgumentException(
-        s"batchInsert: $failedCount invalid row(s); pass allowPartialErrors to skip them")
-    val goodKeys = keysOf(goodSnap)
-    val successCount = countVia(goodKeys, goodSnap)
-    // an all-rejected batch appends nothing — and must not publish a
-    // phantom "insert" ChangeEvent to watchers
-    if (successCount > 0)
-      graft.write.Writes.append(this, name, goodSnap.drop(carriers: _*))
-    graft.write.WriteReport(successCount, failedCount, failedSnap,
-      goodKeys, failedKeys)
+    (flagged.where(c("__ok")).drop("__ok"),
+      flagged.where(!c("__ok")).drop("__ok" +: Graft.Carriers: _*))
   }
 
   /**
@@ -492,9 +467,8 @@ final class Graft(
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types._
     val reg = registry.get(space, name)
-    val schema = reg.map(_.sparkSchema).getOrElse(table(name).schema)
-    val defaultNow = reg.map(_.fields).getOrElse(Nil)
-      .filter(_.defaultCurrentTimestamp).map(_.name).toSet
+    val schema = targetSchema(name)
+    val defaultNow = defaultNowFields(name)
     // executor-side global row index (partition offsets; Spark runs one
     // lightweight count job to compute them). MATERIALIZED via
     // localCheckpoint: the validation splits, unique anti-joins, append and
@@ -555,16 +529,11 @@ final class Graft(
         import graft.schema.PkStrategy
         val pk = s.primaryKey.name
         val hasCol = idxed.columns.contains(pk)
-        val existingMax =
-          if (s.primaryKey.strategy == PkStrategy.Sequential && managedExists(name))
-            Option(table(name).agg(max(col(pk).cast("long"))).head.get(0))
-              .map(_.asInstanceOf[Long]).getOrElse(0L)
-          else 0L
         // every strategy (including Sequential, which advances seqState so
         // concurrent reservations never overlap) needs the block size —
         // already known from the partition-count job, no extra action
         val start = graft.schema.IdGen.reserveFor(idScope(name), s.primaryKey.strategy,
-          totalRows, existingMax)
+          totalRows, pkBase(name, s.primaryKey))
         val gen: org.apache.spark.sql.Column = s.primaryKey.strategy match {
           case PkStrategy.ShortCode =>
             // Base62 needs a scalar fn; everything else stays codegen
@@ -781,6 +750,9 @@ final class Graft(
       indexes = indexes,
       foreignKeys = fks,
       ttl = b.ttlSet.fold(cur.ttl)(identity)))
+    val sp = if (target.isGlobal) "global" else space
+    lazy val fs = new org.apache.hadoop.fs.Path(warehouse.getOrElse(dataDir))
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // ALL table-rename validation runs BEFORE the physical rewrite: if a
     // require threw after Writes.overwrite, the data would already reflect
     // the target schema while the registry still held the old one —
@@ -790,14 +762,8 @@ final class Graft(
       // renameTable is a move, not an overwrite
       require(registry.get(space, finalName).isEmpty,
         s"updateSchema: cannot rename '${b.table}' to '$finalName' — a table with that name is registered")
-      warehouse.foreach { w =>
-        val sp = if (target.isGlobal) "global" else space
-        val fs = new org.apache.hadoop.fs.Path(w)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val to = new org.apache.hadoop.fs.Path(s"$w/$sp/$finalName")
-        require(!fs.exists(to),
-          s"updateSchema: cannot rename '${b.table}' to '$finalName' — destination data exists")
-      }
+      warehouse.foreach(w => require(!fs.exists(new org.apache.hadoop.fs.Path(s"$w/$sp/$finalName")),
+        s"updateSchema: cannot rename '${b.table}' to '$finalName' — destination data exists"))
     }
     // physical: rename columns first so the by-name reconcile keeps the
     // data, write to the CURRENT path, then move the directory on a table
@@ -809,19 +775,13 @@ final class Graft(
       op = "migrate")
     if (finalName != b.table) {
       warehouse.foreach { w =>
-        val sp = if (target.isGlobal) "global" else space
-        val fs = new org.apache.hadoop.fs.Path(w)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
         val from = new org.apache.hadoop.fs.Path(s"$w/$sp/${b.table}")
-        val to = new org.apache.hadoop.fs.Path(s"$w/$sp/$finalName")
-        if (fs.exists(from)) fs.rename(from, to)
+        if (fs.exists(from)) fs.rename(from, new org.apache.hadoop.fs.Path(s"$w/$sp/$finalName"))
       }
       // the sequence moves with the data: a same-second insert after the
       // rename must not reserve an already-used id block
-      graft.schema.IdGen.renameScope(idScope(b.table), {
-        val sp = if (target.isGlobal) "global" else space
-        s"${warehouse.getOrElse(dataDir)}/$sp/$finalName"
-      })
+      graft.schema.IdGen.renameScope(idScope(b.table),
+        s"${warehouse.getOrElse(dataDir)}/$sp/$finalName")
       registry.drop(space, b.table)
       if (cur.isGlobal) registry.drop("global", b.table)
     }
@@ -879,7 +839,7 @@ final class Graft(
   def updateEnforced(name: String, sets: Seq[(String, graft.expr.UExpr)],
       cond: graft.expr.Cond, allowUpdateAll: Boolean = false): Unit =
       graft.write.Writes.exclusiveFlow {
-    import org.apache.spark.sql.functions.{col, lit, when => sqlWhen}
+    import org.apache.spark.sql.functions.{col, lit}
     import graft.schema.FkAction
     if (cond == graft.expr.Cond.True && !allowUpdateAll)
       throw new IllegalArgumentException(
@@ -888,14 +848,13 @@ final class Graft(
     val types = parent.schema.fields.map(f => f.name -> f.dataType).toMap
     val pred = cond.toColumn(col, types.get)
     val setMap = sets.toMap
-    val changed = setMap.keySet
     val affected = referencingFks(name)
-      .filter { case (_, fk) => fk.referencedFields.exists(changed) }
+      .filter { case (_, fk) => fk.referencedFields.exists(setMap.contains) }
 
-    /** (old key cols as __old_*, new key cols as __new_*) of rows whose
+    /** (old key cols as __ref_*, new key cols as __new_*) of rows whose
       * referenced key value actually changes under the SET list. */
     def keyMapping(fk: graft.schema.ForeignKeySchema) = {
-      val olds = fk.referencedFields.map(f => col(f).as(s"__old_$f"))
+      val olds = fk.referencedFields.map(f => col(f).as(s"__ref_$f"))
       val news = fk.referencedFields.map { f =>
         setMap.get(f)
           .map(e => e.toColumn(col, lit(true)).cast(types(f)))
@@ -903,22 +862,16 @@ final class Graft(
       }
       parent.where(pred).select(olds ++ news: _*)
         .where(fk.referencedFields
-          .map(f => !(col(s"__old_$f") <=> col(s"__new_$f"))).reduce(_ || _))
+          .map(f => !(col(s"__ref_$f") <=> col(s"__new_$f"))).reduce(_ || _))
         // one mapping row per old key — a duplicate would multiply child
         // rows through the rewrite join
-        .dropDuplicates(fk.referencedFields.map(f => s"__old_$f"))
-    }
-    def hits(child: DataFrame, fk: graft.schema.ForeignKeySchema, mapping: DataFrame) = {
-      val on = fk.fields.zip(fk.referencedFields)
-        .map { case (cf, rf) => child(cf) === mapping(s"__old_$rf") }.reduce(_ && _)
-      (on, child.join(mapping, on, "left_semi"))
+        .dropDuplicates(fk.referencedFields.map(f => s"__ref_$f"))
     }
 
     // phase 1: every Restrict verified before anything is rewritten
     affected.foreach { case (childSchema, fk) =>
       if (fk.onUpdate == FkAction.Restrict) {
-        val (_, hit) = hits(table(childSchema.name), fk, keyMapping(fk))
-        val nHits = hit.count()
+        val nHits = fkHits(table(childSchema.name), keyMapping(fk), fk).count()
         if (nHits > 0) throw new IllegalStateException(
           s"update restricted: $nHits row(s) in ${childSchema.name} reference $name " +
             s"(onUpdate=restrict, table_schema.dart:2814-2886)")
@@ -930,42 +883,9 @@ final class Graft(
       val child = table(childSchema.name)
       val mapping = keyMapping(fk).localCheckpoint(true)
       fk.onUpdate match {
-        case FkAction.Cascade =>
-          if (!mapping.isEmpty) {
-            val on = fk.fields.zip(fk.referencedFields)
-              .map { case (cf, rf) => child(cf) === mapping(s"__old_$rf") }.reduce(_ && _)
-            val joined = child.join(mapping, on, "left")
-            val matched = fk.referencedFields
-              .map(rf => mapping(s"__old_$rf").isNotNull).reduce(_ && _)
-            val out = childSchema.fieldNames.map { f =>
-              fk.fields.indexOf(f) match {
-                case -1 => child(f).as(f)
-                case i  =>
-                  val rf = fk.referencedFields(i)
-                  sqlWhen(matched, mapping(s"__new_$rf")).otherwise(child(f)).as(f)
-              }
-            }
-            graft.write.Writes.overwrite(this, childSchema.name, joined.select(out: _*))
-          }
-        case FkAction.SetNull | FkAction.SetDefault =>
-          if (!mapping.isEmpty) {
-            val on = fk.fields.zip(fk.referencedFields)
-              .map { case (cf, rf) => child(cf) === mapping(s"__old_$rf") }.reduce(_ && _)
-            val marked = child.join(mapping, on, "left")
-            val defaults = childSchema.fields.map(f => f.name -> f.defaultValue).toMap
-            val matched = fk.referencedFields
-              .map(rf => mapping(s"__old_$rf").isNotNull).reduce(_ && _)
-            val out = childSchema.fieldNames.map { f =>
-              if (fk.fields.contains(f)) {
-                val repl =
-                  if (fk.onUpdate == FkAction.SetDefault)
-                    defaults.getOrElse(f, None).map(lit).getOrElse(lit(null))
-                  else lit(null)
-                sqlWhen(matched, repl).otherwise(child(f)).as(f)
-              } else child(f).as(f)
-            }
-            graft.write.Writes.overwrite(this, childSchema.name, marked.select(out: _*))
-          }
+        case FkAction.Cascade | FkAction.SetNull | FkAction.SetDefault if !mapping.isEmpty =>
+          graft.write.Writes.overwrite(this, childSchema.name,
+            fkRewrite(childSchema, fk, fk.onUpdate, child, mapping))
         case _ => () // Restrict verified in phase 1; NoAction
       }
     }
@@ -984,21 +904,53 @@ final class Graft(
           .map(fk => (s, fk)))
     }
 
-  /** Rows of `child` referencing any victim key (collision-safe join). */
-  private def fkHits(child: DataFrame, victims: DataFrame,
-      fk: graft.schema.ForeignKeySchema): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val keys = victims.select(fk.referencedFields.map(col): _*).distinct()
-      .toDF(fk.referencedFields.map("__ref_" + _): _*)
-    val joinCond = fk.fields.zip(fk.referencedFields)
+  /** The one FK join: `child`'s FK columns equal `keys`' `__ref_<field>`
+    * columns (renamed, so a self-referencing FK joins collision-free). */
+  private def fkOn(child: DataFrame, keys: DataFrame,
+      fk: graft.schema.ForeignKeySchema): org.apache.spark.sql.Column =
+    fk.fields.zip(fk.referencedFields)
       .map { case (cf, rf) => child(cf) === keys("__ref_" + rf) }.reduce(_ && _)
-    child.join(keys, joinCond, "left_semi")
+
+  /** Rows of `child` referencing any key in `keys`. */
+  private def fkHits(child: DataFrame, keys: DataFrame,
+      fk: graft.schema.ForeignKeySchema): DataFrame =
+    child.join(keys, fkOn(child, keys, fk), "left_semi")
+
+  /** The keys of `victims` an FK references, as `__ref_*` (not deduped:
+    * semi/anti joins need no distinct keys, a rewrite does). */
+  private def refKeys(victims: DataFrame, fk: graft.schema.ForeignKeySchema): DataFrame =
+    victims.select(fk.referencedFields.map(victims(_)): _*)
+      .toDF(fk.referencedFields.map("__ref_" + _): _*)
+
+  /** The one FK child rewrite: rows of `child` whose FK matches a row of
+    * `keys` (one row per referenced key) get their FK columns replaced —
+    * Cascade by `keys`' `__new_*` values, SetDefault by the field
+    * default, SetNull by null. Other rows and columns pass unchanged. */
+  private def fkRewrite(childSchema: TableSchema, fk: graft.schema.ForeignKeySchema,
+      action: graft.schema.FkAction, child: DataFrame, keys: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions.{lit, when}
+    import graft.schema.FkAction
+    val defaults = childSchema.fields.map(f => f.name -> f.defaultValue).toMap
+    val matched = fk.referencedFields.map(rf => keys("__ref_" + rf).isNotNull).reduce(_ && _)
+    val out = childSchema.fieldNames.map { f =>
+      fk.fields.indexOf(f) match {
+        case -1 => child(f).as(f)
+        case i =>
+          val repl = action match {
+            case FkAction.Cascade => keys("__new_" + fk.referencedFields(i))
+            case FkAction.SetDefault => defaults.getOrElse(f, None).map(lit).getOrElse(lit(null))
+            case _ => lit(null)
+          }
+          when(matched, repl).otherwise(child(f)).as(f)
+      }
+    }
+    child.join(keys, fkOn(child, keys, fk), "left").select(out: _*)
   }
 
   private def checkRestrict(name: String, victims: DataFrame, visited: Set[String]): Unit = {
     import graft.schema.FkAction
     referencingFks(name).foreach { case (childSchema, fk) =>
-      lazy val hit = fkHits(table(childSchema.name), victims, fk)
+      lazy val hit = fkHits(table(childSchema.name), refKeys(victims, fk), fk)
       fk.onDelete match {
         case FkAction.Restrict =>
           val n = hit.count()
@@ -1013,42 +965,23 @@ final class Graft(
   }
 
   private def applyFkActions(name: String, victims: DataFrame, visited: Set[String]): Unit = {
-    import org.apache.spark.sql.functions.{col, lit, when => sqlWhen}
     import graft.schema.FkAction
     referencingFks(name).foreach { case (childSchema, fk) =>
       val child = table(childSchema.name)
-      val hit = fkHits(child, victims, fk).localCheckpoint(true)
+      val keys = refKeys(victims, fk)
+      val hit = fkHits(child, keys, fk).localCheckpoint(true)
       fk.onDelete match {
-        case FkAction.Restrict => () // verified empty in phase 1
-        case FkAction.Cascade =>
-          if (!hit.isEmpty) {
-            // recurse first (cycle-cut at repeated tables) so grandchildren
-            // honor THEIR actions before the child rows disappear
-            if (!visited.contains(childSchema.name))
-              applyFkActions(childSchema.name, hit, visited + childSchema.name)
-            val pk = childSchema.primaryKey.name
-            val keep = child.join(hit.select(col(pk).as("__del_pk")),
-              child(pk) === col("__del_pk"), "left_anti")
-            graft.write.Writes.overwrite(this, childSchema.name, keep, op = "delete")
-          }
-        case FkAction.SetNull | FkAction.SetDefault =>
-          if (!hit.isEmpty) {
-            val pk = childSchema.primaryKey.name
-            val marked = child.join(hit.select(col(pk).as("__hit_pk")),
-              child(pk) === col("__hit_pk"), "left")
-            val defaults = childSchema.fields.map(f => f.name -> f.defaultValue).toMap
-            val out = childSchema.fieldNames.map { f =>
-              if (fk.fields.contains(f)) {
-                val repl =
-                  if (fk.onDelete == FkAction.SetDefault)
-                    defaults.getOrElse(f, None).map(lit).getOrElse(lit(null))
-                  else lit(null)
-                sqlWhen(col("__hit_pk").isNotNull, repl).otherwise(col(f)).as(f)
-              } else col(f)
-            }
-            graft.write.Writes.overwrite(this, childSchema.name, marked.select(out: _*))
-          }
-        case FkAction.NoAction => ()
+        case FkAction.Cascade if !hit.isEmpty =>
+          // recurse first (cycle-cut at repeated tables) so grandchildren
+          // honor THEIR actions before the child rows disappear
+          if (!visited.contains(childSchema.name))
+            applyFkActions(childSchema.name, hit, visited + childSchema.name)
+          graft.write.Writes.overwrite(this, childSchema.name,
+            child.join(keys, fkOn(child, keys, fk), "left_anti"), op = "delete")
+        case FkAction.SetNull | FkAction.SetDefault if !hit.isEmpty =>
+          graft.write.Writes.overwrite(this, childSchema.name,
+            fkRewrite(childSchema, fk, fk.onDelete, child, keys.distinct()))
+        case _ => () // Restrict verified in phase 1; NoAction; no hits
       }
     }
   }
@@ -1263,6 +1196,8 @@ final class Graft(
 object Graft {
   /** Engine-managed ingest timestamp column backing default TTLs. */
   val IngestTsCol = "_system_ingest_ts_ms"
+  /** Per-row carriers of a staged write batch: parse flag, batch ordinal. */
+  private val Carriers = Seq("__parse_ok", "__row_idx")
   /** KV key backing the user-maintained version number. */
   val VersionKey = "_db_version"
 

@@ -130,22 +130,13 @@ final class KvStore(
   var targetFiles: Int = 1
 
   private def writeAtomic(data: => DataFrame): Unit =
-    // stage → swap with .old backup (same pattern as Writes.overwrite):
-    // a crash between operations never leaves the store missing.
-    // BY-NAME + the shared single-table flow lock (canonical order:
-    // flowLock.read then the path stripe): the merge plan reads the
-    // current store, so it must list files INSIDE the critical section
-    // or a concurrent swap loses one writer's keys
-    graft.write.Writes.singleTableFlow(path) {
-      val conf = spark.sparkContext.hadoopConfiguration
-      val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(conf)
-      // lease-guarded swap shared with Writes.overwrite: cross-process
-      // writers cooperate (wait or fail predictably), crashed-writer
-      // staging debris self-heals under the held lease
-      graft.write.Writes.stagedSwap(fs, path)(tmp =>
-        data.coalesce(math.max(1, targetFiles))
-          .write.mode(SaveMode.Overwrite).parquet(tmp))
-    }
+    // stage → swap with .old backup under the single-table flow lock and
+    // the cross-process lease, as every managed overwrite: a crash never
+    // leaves the store missing, crashed-writer debris self-heals, and the
+    // BY-NAME merge plan lists the store INSIDE the critical section, so
+    // a concurrent swap cannot lose one writer's keys
+    graft.write.Writes.lockedSwap(spark.sparkContext.hadoopConfiguration, path)(tmp =>
+      data.coalesce(math.max(1, targetFiles)).write.mode(SaveMode.Overwrite).parquet(tmp))
 
   // ---------- reads ----------
 

@@ -46,7 +46,7 @@ object DistDrift {
     * prefix accumulator). Surfacing them lets callers drop their own
     * count/total probe jobs (rankSums' tie rollup, yuenT's per-group
     * n, spearman's long-path election) — the round-17 job-count cut. */
-  private[operators] case class PrefixSums(df: DataFrame, nDistinct: Long,
+  private[graft] case class PrefixSums(df: DataFrame, nDistinct: Long,
     totals: Map[String, Long],
     perGroupTotals: Map[Seq[Any], Map[String, Long]] = Map.empty)
 
@@ -66,13 +66,16 @@ object DistDrift {
     * becomes Σ of `c` over smaller `v` WITHIN the row's group — one
     * bucket job for all of kendallW's raters where the old shape ran
     * one full pass per rater. */
-  private[operators] def withPrefixSumsInfo(perValue: DataFrame,
+  private[graft] def withPrefixSumsInfo(perValue: DataFrame,
       cnts: Seq[String], keepBucket: Boolean = false,
       knownBounds: Option[(Double, Double)] = None,
       groupCols: Seq[String] = Nil): PrefixSums = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
     val spark = perValue.sparkSession
+    // the offsets frame types group keys as strings (a schema check, no job)
+    groupCols.foreach(g => require(perValue.schema(g).dataType == StringType,
+      s"withPrefixSumsInfo: group column '$g' must be a string column"))
     val (mn, mx) = knownBounds.getOrElse {
       val stats = perValue.where(col("v").isNotNull)
         .agg(min(col("v").cast("double")).as("mn"),
@@ -123,8 +126,12 @@ object DistDrift {
     val withLocal = cnts.foldLeft(bucketed) { (d, c) =>
       d.withColumn(s"__wb_$c", coalesce(sum(col(c)).over(wIn), lit(0L)))
     }
-    val joined = cnts.foldLeft(
-        withLocal.join(broadcast(offDf), keyCols)) { (d, c) =>
+    // null-safe keys (a null group keeps its offsets), USING-join column order
+    val offJoined = withLocal.join(broadcast(offDf),
+        keyCols.map(k => withLocal(k) <=> offDf(k)).reduce(_ && _))
+      .select((keyCols ++ withLocal.columns.filterNot(keyCols.contains)).map(withLocal(_)) ++
+        cnts.map(c => offDf(s"__off_$c")): _*)
+    val joined = cnts.foldLeft(offJoined) { (d, c) =>
       d.withColumn(s"${c}_below", col(s"__wb_$c") + col(s"__off_$c"))
     }
     PrefixSums(joined.drop((if (keepBucket) Nil else Seq("__b")) ++

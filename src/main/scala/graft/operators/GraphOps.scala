@@ -176,7 +176,7 @@ object GraphOps {
       g.toDF(spark, rank, "rank_units")
     } else {
       import spark.implicits._
-      val seedDf = seeds.toDF("node").withColumn("__seed", lit(1))
+      val seedDf = seeds.distinct.toDF("node").withColumn("__seed", lit(1))
       val nodes = (if (seeds.isEmpty) nodesOf(e)
         else nodesOf(e).union(seedDf.select("node")).distinct()
           .join(broadcast(seedDf), Seq("node"), "left")).cache()

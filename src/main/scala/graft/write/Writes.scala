@@ -1,5 +1,6 @@
 package graft.write
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
@@ -164,12 +165,6 @@ object Writes {
       ).flatten
     }
 
-  /** Atomic overwrite of a managed table: write staging dir, swap. Hub-
-    * attached engines notify watchers after the swap (the single funnel
-    * every mutating path — update/delete/upsert/clear/migrate/FK actions —
-    * flows through). `op` is the REAL mutation name as the caller knows it
-    * (the reference's notification carries the operation, so consumers may
-    * filter by it — a delete must not masquerade as an update). */
   /** Per-table-path write locks: the reference serializes all writes to a
     * table through its write queue (its concurrency claim rests on it);
     * here every managed write is a read-modify-write over the table
@@ -211,17 +206,17 @@ object Writes {
     finally flowLock.readLock().unlock()
   }
 
-  /** `data` is BY-NAME on purpose: a DataFrame built outside the lock has
-    * already LISTED the table's files — a concurrent swap deletes them
-    * under the plan (FAILED_READ_FILE) or, worse, the stale snapshot wins
-    * the swap and silently reverts the other writer. Deferring evaluation
-    * puts the snapshot read inside the critical section. */
-  /** Lease timings for the cross-process swap guard (see [[WriteLease]]),
-    * read per-call so tests and operators tune them without restarts. */
-  private def leaseTimings: (Long, Long, Long) = (
-    sys.props.get("graft.write.lease.staleMs").map(_.toLong).getOrElse(60000L),
-    sys.props.get("graft.write.lease.waitMs").map(_.toLong).getOrElse(30000L),
-    sys.props.get("graft.write.lease.pollMs").map(_.toLong).getOrElse(100L))
+  /** Runs `body` holding the cross-process [[WriteLease]] for `path` —
+    * the one place a write acquires it. Lease timings are read per call
+    * (system properties `graft.write.lease.{staleMs,waitMs,pollMs}`) so
+    * tests and operators tune them without restarts. */
+  private def leased[A](fs: FileSystem, path: String)(body: => A): A = {
+    def prop(k: String, d: Long) =
+      sys.props.get(s"graft.write.lease.$k").map(_.toLong).getOrElse(d)
+    val lease = WriteLease.acquire(fs, path,
+      prop("staleMs", 60000L), prop("waitMs", 30000L), prop("pollMs", 100L))
+    try body finally lease.close()
+  }
 
   /** The ONE stage→swap primitive, now lease-guarded: acquires the
     * cross-process [[WriteLease]] for `path` (second PROCESS waits up to
@@ -234,60 +229,62 @@ object Writes {
     * renames never leaves the table missing. JVM-internal serialization
     * (flow lock + path stripe) is the CALLER's job — the lease alone
     * would let two threads of one process interleave list-then-swap. */
-  private[graft] def stagedSwap(fs: org.apache.hadoop.fs.FileSystem,
-      path: String)(writeStaging: String => Unit): Unit = {
-    val (staleMs, waitMs, pollMs) = leaseTimings
-    val lease = WriteLease.acquire(fs, path, staleMs, waitMs, pollMs)
-    try {
-      val tmp = path + ".staging"
-      val tmpPath = new org.apache.hadoop.fs.Path(tmp)
-      if (fs.exists(tmpPath)) {
-        System.err.println(s"[graft] deleting crashed-writer staging debris $tmp " +
-          "(safe under the held write lease)")
-        fs.delete(tmpPath, true)
-      }
-      // a FAILED staging write (plan error, bad cast) must not leave
-      // debris either — we hold the lease, so deleting it is always safe
-      try writeStaging(tmp)
-      catch { case e: Throwable => fs.delete(tmpPath, true); throw e }
-      val dst = new org.apache.hadoop.fs.Path(path)
-      val bak = new org.apache.hadoop.fs.Path(path + ".old")
-      if (fs.exists(bak)) fs.delete(bak, true)
-      if (fs.exists(dst)) fs.rename(dst, bak)
-      fs.rename(tmpPath, dst)
-      fs.delete(bak, true): Unit
-    } finally lease.close()
+  private[graft] def stagedSwap(fs: FileSystem,
+      path: String)(writeStaging: String => Unit): Unit = leased(fs, path) {
+    val tmp = path + ".staging"
+    val tmpPath = new Path(tmp)
+    if (fs.exists(tmpPath)) {
+      System.err.println(s"[graft] deleting crashed-writer staging debris $tmp " +
+        "(safe under the held write lease)")
+      fs.delete(tmpPath, true)
+    }
+    // a FAILED staging write (plan error, bad cast) must not leave
+    // debris either — we hold the lease, so deleting it is always safe
+    try writeStaging(tmp)
+    catch { case e: Throwable => fs.delete(tmpPath, true); throw e }
+    val dst = new Path(path)
+    val bak = new Path(path + ".old")
+    if (fs.exists(bak)) fs.delete(bak, true)
+    if (fs.exists(dst)) fs.rename(dst, bak)
+    fs.rename(tmpPath, dst)
+    fs.delete(bak, true): Unit
   }
 
+  /** The one locked swap: stage→swap `path` (see [[stagedSwap]]) under
+    * its single-table flow lock — every managed overwrite and the KV
+    * store's rewrite. */
+  private[graft] def lockedSwap(conf: org.apache.hadoop.conf.Configuration,
+      path: String)(writeStaging: String => Unit): Unit =
+    singleTableFlow(path)(stagedSwap(new Path(path).getFileSystem(conf), path)(writeStaging))
+
+  /** Atomic overwrite of a managed table: write staging dir, swap. Hub-
+    * attached engines notify watchers after the swap (the single funnel
+    * every mutating path — update/delete/upsert/clear/migrate/FK actions —
+    * flows through). `op` is the REAL mutation name as the caller knows it
+    * (the reference's notification carries the operation, so consumers may
+    * filter by it — a delete must not masquerade as an update).
+    *
+    * `data` is BY-NAME on purpose: a DataFrame built outside the lock has
+    * already LISTED the table's files — a concurrent swap deletes them
+    * under the plan (FAILED_READ_FILE) or, worse, the stale snapshot wins
+    * the swap and silently reverts the other writer. Deferring evaluation
+    * puts the snapshot read inside the critical section. */
   def overwrite(engine: Graft, table: String, data: => DataFrame,
       op: String = "update"): Unit = {
-    val path = engine.managedPath(table)
-    flowLock.readLock().lock()
-    try lockFor(path).synchronized {
-      val conf = engine.spark.sparkContext.hadoopConfiguration
-      val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(conf)
-      stagedSwap(fs, path)(tmp =>
-        data.write.mode(SaveMode.Overwrite).parquet(tmp))
-    } finally flowLock.readLock().unlock()
+    lockedSwap(engine.spark.sparkContext.hadoopConfiguration, engine.managedPath(table))(
+      tmp => data.write.mode(SaveMode.Overwrite).parquet(tmp))
     engine.notifyWrite(op, table)
   }
 
+  /** Append to a managed table. Append also takes the cross-process lease:
+    * an append racing another PROCESS's staging swap would write its part
+    * files into a directory mid-rename (files land in the .old snapshot
+    * and die with it). Appends from two processes alone would be
+    * name-safe, but the swap race loses data — one lease covers both. */
   def append(engine: Graft, table: String, data: DataFrame): Unit = {
     val path = engine.managedPath(table)
-    flowLock.readLock().lock()
-    try lockFor(path).synchronized {
-      // append also takes the cross-process lease: an append racing
-      // another PROCESS's staging swap would write its part files into a
-      // directory mid-rename (files land in the .old snapshot and die
-      // with it). Appends from two processes alone would be name-safe,
-      // but the swap race loses data — one lease covers both.
-      val conf = engine.spark.sparkContext.hadoopConfiguration
-      val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(conf)
-      val (staleMs, waitMs, pollMs) = leaseTimings
-      val lease = WriteLease.acquire(fs, path, staleMs, waitMs, pollMs)
-      try data.write.mode(SaveMode.Append).parquet(path)
-      finally lease.close()
-    } finally flowLock.readLock().unlock()
+    val fs = new Path(path).getFileSystem(engine.spark.sparkContext.hadoopConfiguration)
+    singleTableFlow(path)(leased(fs, path)(data.write.mode(SaveMode.Append).parquet(path)))
     engine.notifyWrite("insert", table)
   }
 }

@@ -581,4 +581,19 @@ class DistDriftSpec extends SparkSpec {
     assert(modeBlind.getAs[Double]("chi2") > 0.0
       && modeBlind.getAs[Double]("lambda_b_given_a") == 0.0)
   }
+
+  test("grouped prefix sums: a null group keeps its own offsets; non-string groups refused") {
+    val pv = Seq[(String, Long, Long)]((null, 1L, 2L), (null, 3L, 1L), (null, 5L, 4L),
+      ("a", 2L, 1L), ("a", 3L, 5L)).toDF("g", "v", "c")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("v", "c", "c_below").as[(Long, Long, Long)].collect().sortBy(_._1).toSeq
+    val grouped = DistDrift.withPrefixSumsInfo(pv, Seq("c"), groupCols = Seq("g")).df
+    val alone = DistDrift.withPrefixSumsInfo(pv.where(col("g").isNull).drop("g"), Seq("c")).df
+    assert(rows(grouped.where(col("g").isNull)) == rows(alone))
+    assert(rows(alone) == Seq((1L, 2L, 0L), (3L, 1L, 2L), (5L, 4L, 3L)))
+    assert(rows(grouped.where(col("g") === "a")) == Seq((2L, 1L, 0L), (3L, 5L, 1L)))
+    intercept[IllegalArgumentException] {
+      DistDrift.withPrefixSumsInfo(pv.withColumn("g", lit(1)), Seq("c"), groupCols = Seq("g"))
+    }
+  }
 }

@@ -209,6 +209,57 @@ class FacadeSpec extends SparkSpec {
     assert(rep.failed.count() == 1)
   }
 
+  test("batchInsert and batchUpsert decide one batch by the same rules, upsert's merge key aside") {
+    def seeded(): Graft = {
+      val e = Graft.withWarehouse(spark, sfDir,
+        Files.createTempDirectory("graft_modes").toString)
+      e.createTable(TableSchema("bm", PrimaryKeyConfig("id", PkStrategy.None),
+        Seq(
+          FieldSchema("name", GType.GText, nullable = false, maxLength = Some(5)),
+          FieldSchema("qty", GType.GInteger, minValue = Some(0), maxValue = Some(100)),
+          FieldSchema("email", GType.GText, unique = true))))
+      e.batchInsert("bm", Seq(
+        Map("id" -> "1", "name" -> "ann", "qty" -> 1, "email" -> "a@x"),
+        Map("id" -> "2", "name" -> "bob", "qty" -> 2, "email" -> "b@x")))
+      e
+    }
+    val batch = Seq(
+      Map("id" -> "3", "name" -> "cat", "qty" -> "notnum", "email" -> "c@x"), // parse failure
+      Map("id" -> "4", "qty" -> 4, "email" -> "d@x"),                  // null in non-null name
+      Map("id" -> "5", "name" -> "toolong", "qty" -> 5, "email" -> "e@x"), // maxLength
+      Map("id" -> "10", "name" -> "big", "qty" -> 500),                // maxValue
+      Map("id" -> "6", "name" -> "fay", "qty" -> 6, "email" -> "f@x"),
+      Map("id" -> "6", "name" -> "fay2", "qty" -> 7, "email" -> "f@x"), // PK dup, same email
+      Map("id" -> "1", "name" -> "ann2", "qty" -> 10, "email" -> "a@x"), // stored PK, own email
+      Map("id" -> "7", "name" -> "gil", "qty" -> 8, "email" -> "b@x"), // stored email, other PK
+      Map("id" -> "2", "qty" -> 20),                                   // stored PK, no name
+      Map("id" -> "8", "name" -> "hal", "qty" -> 1, "email" -> "h@x"),
+      Map("id" -> "9", "name" -> "ivy", "qty" -> 2, "email" -> "h@x")) // batch email, other PK
+    def ids(df: org.apache.spark.sql.DataFrame): Set[String] =
+      df.collect().map(_.getAs[String]("id")).toSet
+    def contents(e: Graft): Set[(String, String, Long, String)] =
+      e.table("bm").collect().map(r => (r.getAs[String]("id"), r.getAs[String]("name"),
+        r.getAs[Long]("qty"), r.getAs[String]("email"))).toSet
+
+    val ins = seeded()
+    val ir = ins.batchInsert("bm", batch, allowPartialErrors = true)
+    assert(ir.successCount == 2 && ir.failedCount == 9, ir.toString)
+    assert(ids(ir.failed) == Set("3", "4", "5", "10", "6", "1", "7", "2", "9"))
+    assert(ir.failed.collect().map(_.getAs[String]("name")).count(_ == "fay2") == 1)
+    assert(ir.successKeys.sorted == Seq("6", "8"))
+    assert(ir.failedKeys.sorted == Seq("1", "10", "2", "3", "4", "5", "6", "7", "9"))
+    assert(contents(ins) == Set(("1", "ann", 1L, "a@x"), ("2", "bob", 2L, "b@x"),
+      ("6", "fay", 6L, "f@x"), ("8", "hal", 1L, "h@x")))
+
+    val ups = seeded()
+    val ur = ups.batchUpsert("bm", batch)
+    assert(ur.successCount == 5 && ur.failedCount == 6, ur.toString)
+    assert(ids(ur.failed) == Set("3", "4", "5", "10", "7", "9"))
+    assert(ur.successKeys.isEmpty && ur.failedKeys.isEmpty)
+    assert(contents(ups) == Set(("1", "ann2", 10L, "a@x"), ("2", "bob", 20L, "b@x"),
+      ("6", "fay2", 7L, "f@x"), ("8", "hal", 1L, "h@x")))
+  }
+
   test("importFrom: CSV and JSON land through declared-schema coercion") {
     val wh = Files.createTempDirectory("graft_import").toString
     val e = Graft.withWarehouse(spark, sfDir, wh)

@@ -197,6 +197,17 @@ class GraphOpsSpec extends SparkSpec {
     assert(r2("zz") == 150000000L && r2("a") == 0L)
   }
 
+  test("pageRankPersonalized: a repeated seed counts once in both regimes") {
+    val und = Seq(("a", "b"), ("b", "c"))
+    val edges = (und ++ und.map(_.swap)).toDF("src", "dst")
+    def run(seeds: Seq[String], maxLocal: Long) =
+      GraphOps.pageRankPersonalized(edges, seeds, iters = 3, maxLocalEdges = maxLocal)
+        .collect().map(x => x.getString(0) -> x.getLong(1)).toSeq.sorted
+    val once = run(Seq("a"), 1000000L)
+    assert(run(Seq("a", "a"), 1000000L) == once)
+    assert(run(Seq("a", "a"), 0L) == once)
+  }
+
   test("hits: bipartite hand-check — the shared authority wins; branches match") {
     // hubs u1,u2,u3 → authorities x (from u1,u2), y (from u2 only)
     val edges = Seq(("u1", "x"), ("u2", "x"), ("u2", "y"), ("u3", "y"))

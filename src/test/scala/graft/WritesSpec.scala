@@ -1,7 +1,11 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.expr.{Cond, UExpr}
@@ -220,5 +224,55 @@ class WritesSpec extends SparkSpec {
     val rows = e.table("u").collect()
     assert(rows.length == 1, s"duplicate upserts landed: ${rows.mkString(",")}")
     assert((1 to 6).map(_.toLong).contains(rows(0).getLong(1)))
+  }
+
+  /** Spark jobs `body` launches, counted by job group (the listener bus
+    * delivers in order, so a marker job after it flushes every event). */
+  private def jobsOf(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val group = s"writes-jobs-${System.nanoTime()}"
+    val marker = group + "-marker"
+    val seen = new ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(seen.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(marker, marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.currentTimeMillis() + 60000L
+      while (!seen.contains(marker) && System.currentTimeMillis() < deadline) Thread.sleep(10)
+      assert(seen.contains(marker), "listener bus did not deliver the marker job")
+      seen.asScala.count(_ == group)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("one-row facade writes stay under their job ceilings") {
+    import graft.schema._
+    val e = Graft.withWarehouse(spark, sfDir,
+      Files.createTempDirectory("graft_jobs").toString)
+    e.createTable(TableSchema("acc", PrimaryKeyConfig("id", PkStrategy.None),
+      Seq(FieldSchema("name", GType.GText, nullable = false))))
+    e.createTable(TableSchema("hold", PrimaryKeyConfig("id", PkStrategy.None),
+      Seq(FieldSchema("acc_id", GType.GText)),
+      foreignKeys = Seq(ForeignKeySchema(Seq("acc_id"), "acc", Seq("id"),
+        onDelete = FkAction.Cascade))))
+    e.batchInsert("acc", Seq(Map("id" -> "1", "name" -> "a"), Map("id" -> "2", "name" -> "b")))
+    e.batchInsert("hold", Seq(Map("id" -> "h1", "acc_id" -> "1"),
+      Map("id" -> "h2", "acc_id" -> "1"), Map("id" -> "h3", "acc_id" -> "2")))
+    val insert = jobsOf(e.batchInsert("acc", Seq(Map("id" -> "3", "name" -> "c"))))
+    val upsert = jobsOf(e.batchUpsert("acc", Seq(Map("id" -> "2", "name" -> "b2"))))
+    val delete = jobsOf(e.deleteEnforced("acc", Cond.Leaf("id", "=", "1")))
+    // the ceilings are the measured counts: a rise is job creep on the
+    // one-row write path
+    assert(insert <= 11, s"one-row batchInsert started $insert jobs")
+    assert(upsert <= 11, s"one-row batchUpsert started $upsert jobs")
+    assert(delete <= 9, s"one-row deleteEnforced cascade started $delete jobs")
+    assert(e.table("acc").collect().map(_.getString(0)).sorted.toSeq == Seq("2", "3"))
+    assert(e.table("hold").collect().map(_.getString(0)).toSeq == Seq("h3"))
   }
 }
