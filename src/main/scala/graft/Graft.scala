@@ -95,31 +95,25 @@ final class Graft(
   private def idScope(name: String): String =
     s"${warehouse.getOrElse(dataDir)}/${spaceOf(name)}/$name"
 
-  private def managedExists(name: String): Boolean =
-    warehouse.exists { w =>
-      Files.exists(Paths.get(s"$w/$space/$name")) ||
-        Files.exists(Paths.get(s"$w/global/$name"))
-    }
+  /** The stored directory of a managed table: current space, then global. */
+  private def managedDir(name: String): Option[String] = warehouse.flatMap(w =>
+    Seq(s"$w/$space/$name", s"$w/global/$name").find(p => Files.exists(Paths.get(p))))
+
+  private def managedExists(name: String): Boolean = managedDir(name).isDefined
 
   /** Read a table as a DataFrame. TTL tables get the reference's standing
     * expiry filter at scan time (table_schema.dart:1804-1885). */
   def table(name: String): DataFrame = {
-    val df =
-      if (managedExists(name)) {
-        val w = warehouse.get
-        val local = s"$w/$space/$name"
-        val p = if (Files.exists(Paths.get(local))) local else s"$w/global/$name"
-        graft.sources.ParquetNanos.read(spark, p)
-      } else registry.get(space, name) match {
+    val df = managedDir(name).map(graft.sources.ParquetNanos.read(spark, _)).getOrElse(
+      registry.get(space, name) match {
         // registered but never written: empty frame straight from the
         // declared schema (createTable defers the physical directory to
         // the first write — and a registered table must SHADOW a
         // same-named dataDir parquet, as the managed read above does)
         case Some(s) if warehouse.isDefined =>
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s.sparkSchema)
+          spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row], s.sparkSchema)
         case _ => graft.sources.ParquetNanos.read(spark, s"$dataDir/$name.parquet")
-      }
+      })
     registry.get(space, name).flatMap(_.ttl) match {
       case Some(ttl) =>
         val src = ttl.sourceField.getOrElse(Graft.IngestTsCol)
@@ -183,8 +177,10 @@ final class Graft(
   /** Bulk insert. With `allowPartialErrors` invalid rows are skipped and
     * reported instead of failing the batch (tostore.dart:586-597). */
   def batchInsert(name: String, rows: Seq[Map[String, Any]],
-      allowPartialErrors: Boolean = false): graft.write.WriteReport =
-    ingestStaged(name, stageRows(name, rows), allowPartialErrors)
+      allowPartialErrors: Boolean = false): graft.write.WriteReport = {
+    val (staged, unique) = stageRows(name, rows)
+    ingestStaged(name, staged, allowPartialErrors, unique)
+  }
 
   /** Batch upsert of loosely-typed rows (reference batchUpsert,
     * tostore.dart:637-648): coercion/constraint failures split into the
@@ -192,39 +188,17 @@ final class Graft(
     * rows merge update-or-insert by the registered unique key. Duplicate
     * keys within the batch: the LAST occurrence wins (write order). */
   def batchUpsert(name: String, rows: Seq[Map[String, Any]],
-      allowPartialErrors: Boolean = true): graft.write.WriteReport =
-    // whole flow under the table's write stripe (reentrant with the inner
-    // overwrite): the update/insert split and the secondary-unique probe
-    // READ the table — concurrent upserts must see each other's writes
-    graft.write.Writes.singleTableFlow(managedPath(name)) {
-      import org.apache.spark.sql.functions.{col => c, row_number}
-      val staged = stageRows(name, rows)
-      val ks = registry.get(space, name).map(_.uniqueKeySets.head).getOrElse(
-        throw new IllegalArgumentException(
-          "batchUpsert needs a registered schema with a unique key (tostore.dart:637)"))
-      val (good, failed) = validateStaged(name, staged, Some(ks))
-      val failedCount = failed.count()
-      refuseInvalid("batchUpsert", failedCount, allowPartialErrors)
-      val successCount = rows.size.toLong - failedCount
-      // an all-rejected batch must not rewrite the table or publish a phantom
-      // upsert ChangeEvent (mirrors the ingestStaged successCount guard)
-      if (successCount > 0) {
-        // within-batch duplicate MERGE keys: the last occurrence wins
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(ks.map(c): _*).orderBy(c("__row_idx").desc)
-        val deduped = good.withColumn("__rn", row_number().over(w))
-          .where(c("__rn") === 1).drop("__rn" +: Graft.Carriers: _*)
-        graft.write.Writes.overwrite(this, name,
-          graft.write.Writes.upsertMerge(table(name), deduped, ks), op = "upsert")
-      }
-      graft.write.WriteReport(successCount, failedCount, failed)
-    }
+      allowPartialErrors: Boolean = true): graft.write.WriteReport = {
+    val (staged, unique) = stageRows(name, rows)
+    val ks = keysOrPk(name, Nil,
+      "batchUpsert needs a registered schema with a unique key (tostore.dart:637)")
+    ingestStaged(name, staged, allowPartialErrors, unique, Some(ks))
+  }
 
-  private def refuseInvalid(op: String, failedCount: Long,
-      allowPartialErrors: Boolean): Unit =
-    if (!allowPartialErrors && failedCount > 0)
-      throw new IllegalArgumentException(
-        s"$op: $failedCount invalid row(s); pass allowPartialErrors to skip them")
+  /** `keys`, else the registered PK (the first unique key set). */
+  private def keysOrPk(name: String, keys: Seq[String], missing: String): Seq[String] =
+    if (keys.nonEmpty) keys else registry.get(space, name).map(_.uniqueKeySets.head)
+      .getOrElse(throw new IllegalArgumentException(missing))
 
   /** The declared schema of a registered table, else the stored one. */
   private def targetSchema(name: String): org.apache.spark.sql.types.StructType =
@@ -246,8 +220,11 @@ final class Graft(
 
   /** Shared staging of loosely-typed map rows: PK generation + per-value
     * coercion to the declared schema, flagged (never thrown) failures,
-    * batch row ordinal. Output carries `__parse_ok` + `__row_idx`. */
-  private def stageRows(name: String, rows: Seq[Map[String, Any]]): DataFrame = {
+    * batch row ordinal. Output carries `__parse_ok` + `__row_idx` and is a
+    * LocalRelation (known size: its joins broadcast), paired with the
+    * unique key sets whose non-NULL values never repeat in the batch. */
+  private def stageRows(name: String,
+      rows: Seq[Map[String, Any]]): (DataFrame, Set[Seq[String]]) = {
     val schema = targetSchema(name)
     // loose typing (FieldSchema.convertValue, table_schema.dart:1356-1446):
     // values are coerced to the declared column type before encoding
@@ -308,45 +285,54 @@ final class Graft(
     val stagingSchema = StructType(schema.fields.map(_.copy(nullable = true)) ++ Seq(
       StructField("__parse_ok", BooleanType, nullable = false),
       StructField("__row_idx", LongType, nullable = false)))
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(data, math.max(1, rows.size / 10000)), stagingSchema)
+    // Spark's key equality on the values `jvm` yields (any other value is
+    // one key: two of them never prove a set unique)
+    def keyOf(v: Any): Any = v match {
+      case s: String => org.apache.spark.unsafe.types.UTF8String.fromString(s)
+      case d: Double => d + 0.0 // -0.0 joins 0.0; NaN equals NaN
+      case t: java.sql.Timestamp =>
+        org.apache.spark.sql.catalyst.util.DateTimeUtils.fromJavaTimestamp(t)
+      case _: Long | _: Int | _: Boolean => v
+      case _ => ()
+    }
+    val unique = registry.get(space, name).toSeq.flatMap(_.uniqueKeySets)
+      .filter(_.forall(schema.fieldNames.contains)).filter { ks =>
+        val keys = data.map(r => ks.map(k => r.get(schema.fieldIndex(k)))).filterNot(_.contains(null))
+        keys.map(_.map(keyOf)).distinct.size == keys.size
+      }.toSet
+    (spark.createDataFrame(java.util.Arrays.asList(data: _*), stagingSchema), unique)
   }
 
-  /** Shared tail of the two ingest paths (`batchInsert`, `insertFrom`):
-    * validates `staged` (see [[validateStaged]]), appends the good rows,
-    * reports the bad ones with bounded key lists. */
-  private def ingestStaged(name: String, staged: DataFrame,
-      allowPartialErrors: Boolean,
-      provablyUnique: Set[Seq[String]] = Set.empty): graft.write.WriteReport =
+  /** The write funnel of `batchInsert`, `insertFrom` and `batchUpsert`:
+    * validates `staged` ([[validateStaged]]), appends the good rows (with a
+    * `mergeKey`: update-or-insert), reports the bad ones. */
+  private def ingestStaged(name: String, staged: DataFrame, allowPartialErrors: Boolean,
+      provablyUnique: Set[Seq[String]],
+      mergeKey: Option[Seq[String]] = None): graft.write.WriteReport =
     // whole flow under the table's write stripe (reentrant with the inner
-    // append/overwrite): the unique-constraint probe READS the table, so
-    // two concurrent batches carrying the same key would otherwise both
-    // pass the check and both land
+    // write): the validation READS the table, so two concurrent batches
+    // with one key would otherwise both pass the check and both land
     graft.write.Writes.singleTableFlow(managedPath(name)) {
-      val (goodSnap, failedSnap) = validateStaged(name, staged, None, provablyUnique)
-      val pkOpt = registry.get(space, name).map(_.primaryKey.name)
-        .filter(staged.columns.contains)
-      def keysOf(df: DataFrame): Seq[String] = pkOpt.map(pk =>
-        df.select(df(pk).cast("string")).limit(graft.write.WriteReport.KeyListCap)
-          .collect().map(_.getString(0)).toSeq).getOrElse(Nil)
-      // when the bounded key collect came back under its cap it IS the exact
-      // row count — skip the separate count job (these report counts run on
-      // every insert; at gate grain the job overhead dominates the data)
-      def countVia(keys: Seq[String], df: DataFrame): Long =
-        if (pkOpt.isDefined && keys.size < graft.write.WriteReport.KeyListCap)
-          keys.size.toLong
-        else df.count()
-      val failedKeys = keysOf(failedSnap)
-      val failedCount = countVia(failedKeys, failedSnap)
-      refuseInvalid("batchInsert", failedCount, allowPartialErrors)
-      val goodKeys = keysOf(goodSnap)
-      val successCount = countVia(goodKeys, goodSnap)
-      // an all-rejected batch appends nothing — and must not publish a
-      // phantom "insert" ChangeEvent to watchers
-      if (successCount > 0)
-        graft.write.Writes.append(this, name, goodSnap.drop(Graft.Carriers: _*))
-      graft.write.WriteReport(successCount, failedCount, failedSnap,
-        goodKeys, failedKeys)
+      import org.apache.spark.sql.functions.{col => c, row_number}
+      val (good, report) = validateStaged(name, staged, mergeKey, provablyUnique)
+      if (!allowPartialErrors && report.failedCount > 0)
+        throw new IllegalArgumentException(s"${mergeKey.fold("batchInsert")(_ => "batchUpsert")}: " +
+          s"${report.failedCount} invalid row(s); pass allowPartialErrors to skip them")
+      // an all-rejected batch writes nothing — and must not publish a
+      // phantom ChangeEvent to watchers
+      if (report.successCount > 0) mergeKey match {
+        // one file per 10k rows: a small batch must not land one file per core
+        case None => graft.write.Writes.append(this, name, good.drop(Graft.Carriers: _*)
+          .coalesce(math.max(1, (report.successCount / 10000).toInt)))
+        case Some(ks) =>
+          // within-batch duplicate merge keys: the last occurrence wins
+          val deduped = if (provablyUnique.contains(ks)) good else good.withColumn("__rn",
+            row_number().over(org.apache.spark.sql.expressions.Window
+              .partitionBy(ks.map(c): _*).orderBy(c("__row_idx").desc))).where(c("__rn") === 1)
+          graft.write.Writes.overwrite(this, name, graft.write.Writes.upsertMerge(
+            table(name), deduped.drop("__rn" +: Graft.Carriers: _*), ks), op = "upsert")
+      }
+      if (mergeKey.isEmpty) report else report.copy(successKeys = Nil, failedKeys = Nil)
     }
 
   /** The one batch validation kernel of `batchInsert`, `insertFrom` and
@@ -356,9 +342,12 @@ final class Graft(
     * parse, declared constraints (table_schema.dart:1177-1216), nullability
     * or uniqueness (data_store_impl.dart:1527→2229): the first occurrence
     * of a key in the batch wins, a key already stored is rejected (anti-
-    * join, no driver-side key lists), NULL keys never collide. Returns
-    * (surviving rows with carriers, failed rows without), both read from
-    * ONE localCheckpoint.
+    * join, no driver-side key lists), NULL keys never collide. Each
+    * rejection is carved out of the current survivors, which shrink to
+    * its complement: the failed splits are disjoint, a row counts once.
+    * Returns the survivors (with carriers) and the report, both read from
+    * ONE boundary a later swap cannot invalidate: a collect back into a
+    * LocalRelation for a driver-staged batch, else a localCheckpoint.
     *
     * Upsert passes its `mergeKey`: that set is not checked (duplicates are
     * last-wins, a stored match an update), nullability binds only rows
@@ -371,77 +360,89 @@ final class Graft(
     * in the same batch (same family as the loose-join divergence in
     * COVERAGE.md); split such flows into two batches.
     *
-    * @param provablyUnique key sets unique by construction (a PK generated
-    *        for EVERY row from a reserved block): no within-batch window
-    *        for them — a 10M-row ingest must not shuffle on a key that
-    *        cannot collide; the stored-key anti-join still runs. */
+    * @param provablyUnique key sets that cannot repeat within the batch (a
+    *        PK generated for EVERY row from a reserved block, or keys
+    *        `stageRows` saw distinct): no within-batch window for them —
+    *        a 10M-row ingest must not shuffle on a key that cannot
+    *        collide; the stored-key anti-join still runs. */
   private def validateStaged(name: String, staged: DataFrame,
       mergeKey: Option[Seq[String]],
-      provablyUnique: Set[Seq[String]] = Set.empty): (DataFrame, DataFrame) = {
+      provablyUnique: Set[Seq[String]]): (DataFrame, graft.write.WriteReport) = {
     import org.apache.spark.sql.functions.{col => c, first, lit, row_number}
     import graft.write.Writes.validateRows
     val regSchema = registry.get(space, name)
     val notNull = targetSchema(name).fields.filterNot(_.nullable).map(_.name).toSeq
     val checks = c("__parse_ok") +:
       regSchema.map(s => graft.write.Writes.constraintChecks(s.fields)).getOrElse(Nil)
-    // one limit-1 probe decides whether the existing-table joins run at
-    // all — a bulk load into a fresh table must not shuffle the whole
-    // batch against an empty scan per unique key set
-    lazy val existingNonEmpty = managedExists(name) && !table(name).isEmpty
     val mk = mergeKey.getOrElse(Nil)
+    val keySets = regSchema.toSeq.flatMap(_.uniqueKeySets.distinct)
+      .filterNot(mergeKey.contains).filter(_.forall(staged.columns.contains))
+    // ONE read of the stored key columns (as `__ex_*`) serves every stored-
+    // key join, one reused broadcast; an empty table needs no probe job
+    val exCols = (mk ++ keySets.flatten).distinct
+    val stored = Some(exCols).filter(_.nonEmpty && managedExists(name)).map(ks =>
+      table(name).select(ks.map(c): _*).toDF(ks.map("__ex_" + _): _*))
+    def storedOn(ks: Seq[String]) = ks.map(k => c(k) === c("__ex_" + k)).reduce(_ && _)
     // upsert rows whose merge key is stored are updates: no nullability
-    val storedKeys = mergeKey.filter(_ => existingNonEmpty)
-      .map(ks => table(name).select(ks.map(c): _*))
+    val updates = stored.filter(_ => mk.nonEmpty)
     val (insGood, insBad) = validateRows(
-      storedKeys.fold(staged)(keys => staged.join(keys, mk, "left_anti")), notNull, checks)
+      updates.fold(staged)(ex => staged.join(ex, storedOn(mk), "left_anti")), notNull, checks)
     var good = insGood
     var bads = List(insBad)
-    storedKeys.foreach { keys =>
-      val (g, b) = validateRows(staged.join(keys, mk, "left_semi"), Nil, checks)
+    updates.foreach { ex =>
+      val (g, b) = validateRows(staged.join(ex, storedOn(mk), "left_semi"), Nil, checks)
       good = g.unionByName(good)
       bads ::= b
     }
-    regSchema.toSeq.flatMap(_.uniqueKeySets.distinct).filterNot(mergeKey.contains).foreach { ks =>
-      if (ks.forall(staged.columns.contains)) {
-        if (!provablyUnique.contains(ks)) {
-          val keyNotNull = ks.map(c(_).isNotNull).reduce(_ && _)
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy(ks.map(c): _*).orderBy(c("__row_idx"))
-          val marked = mk.foldLeft(good.withColumn("__rn", row_number().over(w))) {
-            (df, k) => df.withColumn("__first_" + k, first(c(k)).over(w))
-          }
-          val sameAsFirst = mk.map(k => c(k) <=> c("__first_" + k))
-            .reduceOption(_ && _).getOrElse(lit(false))
-          val helpers = "__rn" +: mk.map("__first_" + _)
-          bads ::= marked.where(keyNotNull && c("__rn") > 1 && !sameAsFirst)
-            .drop(helpers: _*)
-          good = marked.where(!keyNotNull || c("__rn") === 1 || sameAsFirst)
-            .drop(helpers: _*)
+    keySets.foreach { ks =>
+      if (!provablyUnique.contains(ks)) {
+        val keyNotNull = ks.map(c(_).isNotNull).reduce(_ && _)
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy(ks.map(c): _*).orderBy(c("__row_idx"))
+        val marked = mk.foldLeft(good.withColumn("__rn", row_number().over(w))) {
+          (df, k) => df.withColumn("__first_" + k, first(c(k)).over(w))
         }
-        if (existingNonEmpty) {
-          val exCols = (ks ++ mk).distinct
-          val stored = table(name).select(exCols.map(c): _*)
-            .toDF(exCols.map("__ex_" + _): _*)
-          val differs = mk.map(k => !(c(k) <=> c("__ex_" + k)))
-            .reduceOption(_ || _).getOrElse(lit(true))
-          val on = ks.map(k => c(k) === c("__ex_" + k)).reduce(_ && _) && differs
-          bads ::= good.join(stored, on, "left_semi")
-          good = good.join(stored, on, "left_anti")
-        }
+        val sameAsFirst = mk.map(k => c(k) <=> c("__first_" + k))
+          .reduceOption(_ && _).getOrElse(lit(false))
+        val helpers = "__rn" +: mk.map("__first_" + _)
+        bads ::= marked.where(keyNotNull && c("__rn") > 1 && !sameAsFirst)
+          .drop(helpers: _*)
+        good = marked.where(!keyNotNull || c("__rn") === 1 || sameAsFirst)
+          .drop(helpers: _*)
+      }
+      stored.foreach { ex =>
+        // a stored owner with this row's merge key is its own record
+        val on = storedOn(ks) && mk.map(k => !(c(k) <=> c("__ex_" + k)))
+          .reduceOption(_ || _).getOrElse(lit(true))
+        bads ::= good.join(ex, on, "left_semi")
+        good = good.join(ex, on, "left_anti")
       }
     }
-    // a row can trip several checks (e.g. two unique key sets, or parse +
-    // collision) — dedupe by ordinal so failedCount counts ROWS, not reasons
-    val bad = bads.reduce(_ unionByName _).dropDuplicates("__row_idx")
-    // ONE job snapshots BOTH splits; localCheckpoint severs the file
-    // lineage a later atomic swap would invalidate, and the counts, key
-    // lists and write read the pinned result instead of re-running the
-    // validation pipeline once per action
+    val pk = regSchema.map(_.primaryKey.name).filter(staged.columns.contains)
     val flagged = good.withColumn("__ok", lit(true))
-      .unionByName(bad.withColumn("__ok", lit(false)))
-      .localCheckpoint(true)
-    (flagged.where(c("__ok")).drop("__ok"),
-      flagged.where(!c("__ok")).drop("__ok" +: Graft.Carriers: _*))
+      .unionByName(bads.reduce(_ unionByName _).withColumn("__ok", lit(false)))
+      .withColumn("__key", pk.fold(lit(null))(c).cast("string"))
+    val cap = graft.write.WriteReport.KeyListCap
+    // counts, key lists and the write read the boundary, not the pipeline
+    val rows = Some(staged.queryExecution.logical).collect {
+      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+        flagged.collect().sortBy(_.getAs[Long]("__row_idx")) // batch order
+    }
+    val pinned = rows.fold(flagged.localCheckpoint(true))(rs =>
+      spark.createDataFrame(java.util.Arrays.asList(rs: _*), flagged.schema))
+    def split(ok: Boolean): (Long, Seq[String]) = rows match {
+      case Some(rs) =>
+        val mine = rs.filter(_.getAs[Boolean]("__ok") == ok)
+        (mine.length, mine.take(cap).map(_.getAs[String]("__key")).toSeq)
+      case None =>
+        val part = pinned.where(c("__ok") === ok)
+        val keys = part.select("__key").limit(cap).collect().map(_.getString(0)).toSeq
+        (if (keys.size < cap) keys.size else part.count(), keys) // under the cap: exact
+    }
+    val ((goodCount, goodKeys), (failedCount, failedKeys)) = (split(true), split(false))
+    (pinned.where(c("__ok")).drop("__ok", "__key"), graft.write.WriteReport(goodCount,
+      failedCount, pinned.where(!c("__ok")).drop("__ok" +: "__key" +: Graft.Carriers: _*),
+      if (pk.isDefined) goodKeys else Nil, if (pk.isDefined) failedKeys else Nil))
   }
 
   /**
@@ -600,21 +601,15 @@ final class Graft(
   /** batchUpdate: partial per-field update of rows located by PK
     * (tostore.dart:675-686); unknown PKs are ignored (no insert). */
   def batchUpdate(name: String, staged: DataFrame, keys: Seq[String] = Nil): Unit = {
-    val ks =
-      if (keys.nonEmpty) keys
-      else registry.get(space, name).map(s => Seq(s.primaryKey.name)).getOrElse(
-        throw new IllegalArgumentException("batchUpdate needs key columns or a registered schema"))
+    val ks = keysOrPk(name, keys, "batchUpdate needs key columns or a registered schema")
     graft.write.Writes.overwrite(this, name,
       graft.write.Writes.batchUpdateMerge(table(name), staged, ks))
   }
 
   /** Upsert staged rows by PK / unique key (data_store_impl.dart:2229). */
   def upsert(name: String, staged: DataFrame, keys: Seq[String] = Nil): Unit = {
-    val ks =
-      if (keys.nonEmpty) keys
-      else registry.get(space, name).map(_.uniqueKeySets.head).getOrElse(
-        throw new IllegalArgumentException(
-          s"upsert needs key columns or a registered schema with a unique key (tostore.dart:605)"))
+    val ks = keysOrPk(name, keys,
+      "upsert needs key columns or a registered schema with a unique key (tostore.dart:605)")
     graft.write.Writes.overwrite(this, name,
       graft.write.Writes.upsertMerge(table(name), staged, ks), op = "upsert")
   }
@@ -815,8 +810,10 @@ final class Graft(
     // phase 2: apply cascades / set-actions, then delete the root victims.
     // victim sets are MATERIALIZED (localCheckpoint severs file lineage):
     // a lazy plan captured before an overwrite would re-scan swapped-out
-    // files mid-cascade
-    applyFkActions(name, victims.localCheckpoint(true), Set(name))
+    // files mid-cascade — pinned on first use, so a delete no FK action
+    // reads pays no job for it
+    lazy val pinned = victims.localCheckpoint(true)
+    applyFkActions(name, pinned, Set(name))
     graft.write.Writes.overwrite(this, name,
       graft.write.Writes.deletePreview(table(name), cond, allowDeleteAll = true),
       op = "delete")
@@ -880,12 +877,11 @@ final class Graft(
     // phase 2: child rewrites (materialized mappings — the parent overwrite
     // below swaps the files a lazy plan would re-scan)
     affected.foreach { case (childSchema, fk) =>
-      val child = table(childSchema.name)
-      val mapping = keyMapping(fk).localCheckpoint(true)
       fk.onUpdate match {
-        case FkAction.Cascade | FkAction.SetNull | FkAction.SetDefault if !mapping.isEmpty =>
-          graft.write.Writes.overwrite(this, childSchema.name,
-            fkRewrite(childSchema, fk, fk.onUpdate, child, mapping))
+        case FkAction.Cascade | FkAction.SetNull | FkAction.SetDefault =>
+          val mapping = keyMapping(fk).localCheckpoint(true)
+          if (!mapping.isEmpty) graft.write.Writes.overwrite(this, childSchema.name,
+            fkRewrite(childSchema, fk, fk.onUpdate, table(childSchema.name), mapping))
         case _ => () // Restrict verified in phase 1; NoAction
       }
     }
@@ -964,21 +960,29 @@ final class Graft(
     }
   }
 
-  private def applyFkActions(name: String, victims: DataFrame, visited: Set[String]): Unit = {
+  /** `victims` is by-name: it is read only when an action needs it. */
+  private def applyFkActions(name: String, victims: => DataFrame, visited: Set[String]): Unit = {
     import graft.schema.FkAction
     referencingFks(name).foreach { case (childSchema, fk) =>
-      val child = table(childSchema.name)
-      val keys = refKeys(victims, fk)
-      val hit = fkHits(child, keys, fk).localCheckpoint(true)
+      lazy val child = table(childSchema.name)
+      lazy val keys = refKeys(victims, fk)
       fk.onDelete match {
-        case FkAction.Cascade if !hit.isEmpty =>
-          // recurse first (cycle-cut at repeated tables) so grandchildren
-          // honor THEIR actions before the child rows disappear
-          if (!visited.contains(childSchema.name))
-            applyFkActions(childSchema.name, hit, visited + childSchema.name)
-          graft.write.Writes.overwrite(this, childSchema.name,
-            child.join(keys, fkOn(child, keys, fk), "left_anti"), op = "delete")
-        case FkAction.SetNull | FkAction.SetDefault if !hit.isEmpty =>
+        case FkAction.Cascade =>
+          // materialized: the recursion may rewrite the tables it reads
+          val hit = fkHits(child, keys, fk).localCheckpoint(true)
+          if (!hit.isEmpty) {
+            // recurse first (cycle-cut at repeated tables) so grandchildren
+            // honor THEIR actions before the child rows disappear
+            if (!visited.contains(childSchema.name))
+              applyFkActions(childSchema.name, hit, visited + childSchema.name)
+            // re-read: the recursion may have rewritten this very table (a
+            // self-referencing FK), swapping out the files `child` lists
+            graft.write.Writes.overwrite(this, childSchema.name, {
+              val now = table(childSchema.name)
+              now.join(keys, fkOn(now, keys, fk), "left_anti")
+            }, op = "delete")
+          }
+        case FkAction.SetNull | FkAction.SetDefault if !fkHits(child, keys, fk).isEmpty =>
           graft.write.Writes.overwrite(this, childSchema.name,
             fkRewrite(childSchema, fk, fk.onDelete, child, keys.distinct()))
         case _ => () // Restrict verified in phase 1; NoAction; no hits
@@ -1001,13 +1005,16 @@ final class Graft(
     registry.drop(space, name)
     if (wasGlobal) registry.drop("global", name)
     warehouse.foreach { w =>
-      val fs = new org.apache.hadoop.fs.Path(w)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      Seq(s"$w/$space/$name", s"$w/global/$name").foreach { p =>
-        val hp = new org.apache.hadoop.fs.Path(p)
-        if ((wasGlobal || !p.contains("/global/")) && fs.exists(hp)) fs.delete(hp, true)
-      }
+      removeTree(s"$w/$space/$name")
+      if (wasGlobal) removeTree(s"$w/global/$name")
     }
+  }
+
+  /** Deletes the directory tree at `path`, if there is one. */
+  private def removeTree(path: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(p)) fs.delete(p, true)
   }
 
   // ---------- instance / space diagnostics (lib/tostore.dart:905-1160) ----------
@@ -1063,11 +1070,7 @@ final class Graft(
       queryCache.clear() // space-wide file delete bypasses notifyWrite
       registry.ownTables(name).foreach(t => registry.drop(name, t))
       graft.schema.IdGen.resetPrefix(s"${warehouse.getOrElse(dataDir)}/$name/")
-      warehouse.foreach { w =>
-        val p = new org.apache.hadoop.fs.Path(s"$w/$name")
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(p)) fs.delete(p, true)
-      }
+      warehouse.foreach(w => removeTree(s"$w/$name"))
       true
     }
   }
@@ -1095,11 +1098,7 @@ final class Graft(
     queryCache.clear()
     registry.clearAll()
     graft.schema.IdGen.resetPrefix(s"${warehouse.getOrElse(dataDir)}/")
-    warehouse.foreach { w =>
-      val p = new org.apache.hadoop.fs.Path(w)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
+    warehouse.foreach(removeTree)
   }
 
   private def dirSize(path: String): Long = {

@@ -2,6 +2,8 @@ package graft.kv
 
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -99,8 +101,10 @@ final class KvStore(
     require(ttlMs.isEmpty || expiresAt.isEmpty, "ttl and expiresAt are mutually exclusive")
     val exp: Timestamp = expiresAt.orElse(
       ttlMs.map(ms => new Timestamp(System.currentTimeMillis() + ms))).orNull
+    // one row per key, the batch's last value winning; a LocalRelation,
+    // whose known size lets the merge broadcast it instead of shuffling
     val staged = spark.createDataFrame(
-      spark.sparkContext.parallelize(kvs.map { case (k, v) => Row(k, v, exp) }, 1), schema)
+      kvs.toMap.map { case (k, v) => Row(k, v, exp) }.toSeq.asJava, schema)
     // the merge reads the live store (`df`) — built inside writeAtomic's
     // by-name argument so the snapshot is taken under the lock
     writeAtomic(df.as("t")
@@ -175,7 +179,6 @@ final class KvStore(
     * partition at a time (`toLocalIterator`) — driver memory is O(one
     * partition), not O(store). */
   def keysIterator(prefix: Option[String] = None): Iterator[String] = {
-    import scala.jdk.CollectionConverters._
     val base = prefix.fold(df)(p => df.where(col("key").startsWith(p)))
     base.select("key").toLocalIterator().asScala.map(_.getString(0))
   }

@@ -182,6 +182,24 @@ class FkMigrationSpec extends SparkSpec {
     assert(e.table("b").count() == 0)
   }
 
+  test("a cascade whose child rewrites itself on the way re-reads that child") {
+    val e = Graft.withWarehouse(spark, sfDir, Files.createTempDirectory("graft_fkself").toString)
+    e.createTable(TableSchema("p", PrimaryKeyConfig("id", PkStrategy.None),
+      Seq(FieldSchema("name", GType.GText))))
+    e.createTable(TableSchema("x", PrimaryKeyConfig("id", PkStrategy.None),
+      Seq(FieldSchema("pid", GType.GText), FieldSchema("par", GType.GText)),
+      foreignKeys = Seq(
+        ForeignKeySchema(Seq("pid"), "p", Seq("id"), onDelete = FkAction.Cascade),
+        ForeignKeySchema(Seq("par"), "x", Seq("id"), onDelete = FkAction.SetNull))))
+    e.batchInsert("p", Seq(Map("id" -> "1", "name" -> "a"), Map("id" -> "2", "name" -> "b")))
+    e.batchInsert("x", Seq(Map("id" -> "x1", "pid" -> "1"),
+      Map("id" -> "x2", "pid" -> "2", "par" -> "x1")))
+    e.deleteEnforced("p", Cond.Leaf("id", "=", "1"))
+    assert(e.table("p").collect().map(_.getString(0)).toSeq == Seq("2"))
+    val x = e.table("x").collect().map(r => (r.getString(0), r.getString(1), Option(r.getString(2))))
+    assert(x.toSeq == Seq(("x2", "2", None)), x.mkString(","))
+  }
+
   test("deleteEnforced honors the condition-less guard") {
     val e = engineWith(FkAction.NoAction)
     intercept[IllegalArgumentException] { e.deleteEnforced("emp", Cond.True) }

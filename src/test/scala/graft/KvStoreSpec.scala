@@ -24,6 +24,13 @@ class KvStoreSpec extends SparkSpec {
     assert(kv.get("missing").isEmpty)
   }
 
+  test("setMany: a key repeated in one batch is stored once, with its last value") {
+    val kv = freshKv()
+    kv.setMany(Seq("a" -> "1", "b" -> "2", "a" -> "3"))
+    assert(kv.get("a").contains("3"))
+    assert(kv.df.count() == 2)
+  }
+
   test("NULL values: get → None, getMany omits the key (no nulls in the map)") {
     val kv = freshKv()
     kv.setMany(Seq("present" -> "v", "nullish" -> null))

@@ -267,12 +267,63 @@ class WritesSpec extends SparkSpec {
     val insert = jobsOf(e.batchInsert("acc", Seq(Map("id" -> "3", "name" -> "c"))))
     val upsert = jobsOf(e.batchUpsert("acc", Seq(Map("id" -> "2", "name" -> "b2"))))
     val delete = jobsOf(e.deleteEnforced("acc", Cond.Leaf("id", "=", "1")))
+    e.kv.set("k0", "v0")
+    val kvSet = jobsOf(e.kv.set("k1", "v1"))
     // the ceilings are the measured counts: a rise is job creep on the
     // one-row write path
-    assert(insert <= 11, s"one-row batchInsert started $insert jobs")
-    assert(upsert <= 11, s"one-row batchUpsert started $upsert jobs")
+    assert(insert <= 4, s"one-row batchInsert started $insert jobs")
+    assert(upsert <= 6, s"one-row batchUpsert started $upsert jobs")
     assert(delete <= 9, s"one-row deleteEnforced cascade started $delete jobs")
+    assert(kvSet <= 2, s"one-row kv.set started $kvSet jobs")
     assert(e.table("acc").collect().map(_.getString(0)).sorted.toSeq == Seq("2", "3"))
     assert(e.table("hold").collect().map(_.getString(0)).toSeq == Seq("h3"))
+  }
+
+  test("a NoAction child FK adds no job to a one-row deleteEnforced") {
+    import graft.schema._
+    def engine(fks: Seq[ForeignKeySchema]): Graft = {
+      val e = Graft.withWarehouse(spark, sfDir,
+        Files.createTempDirectory("graft_noaction").toString)
+      e.createTable(TableSchema("acc", PrimaryKeyConfig("id", PkStrategy.None),
+        Seq(FieldSchema("name", GType.GText))))
+      e.createTable(TableSchema("note", PrimaryKeyConfig("id", PkStrategy.None),
+        Seq(FieldSchema("acc_id", GType.GText)), foreignKeys = fks))
+      e.batchInsert("acc", Seq(Map("id" -> "1", "name" -> "a"), Map("id" -> "2", "name" -> "b")))
+      e.batchInsert("note", Seq(Map("id" -> "n1", "acc_id" -> "9")))
+      e
+    }
+    val plain = engine(Nil)
+    val noAction = engine(Seq(ForeignKeySchema(Seq("acc_id"), "acc", Seq("id"),
+      onDelete = FkAction.NoAction)))
+    val base = jobsOf(plain.deleteEnforced("acc", Cond.Leaf("id", "=", "1")))
+    val withFk = jobsOf(noAction.deleteEnforced("acc", Cond.Leaf("id", "=", "1")))
+    assert(withFk == base, s"NoAction FK: $withFk jobs, none: $base")
+    assert(noAction.table("acc").collect().map(_.getString(0)).toSeq == Seq("2"))
+    assert(noAction.table("note").count() == 1)
+  }
+
+  test("a partial batchInsert's report reads the same after a later overwrite") {
+    import graft.schema._
+    val e = Graft.withWarehouse(spark, sfDir,
+      Files.createTempDirectory("graft_report").toString)
+    e.createTable(TableSchema("acc", PrimaryKeyConfig("id", PkStrategy.None),
+      Seq(FieldSchema("name", GType.GText, nullable = false), FieldSchema("qty", GType.GInteger))))
+    e.batchInsert("acc", Seq(Map("id" -> "1", "name" -> "a", "qty" -> 1)))
+    val rep = e.batchInsert("acc", Seq(
+      Map("id" -> "1", "name" -> "dup", "qty" -> "x"), // unparseable AND a stored key
+      Map("id" -> "2", "name" -> "b", "qty" -> 2),
+      Map("id" -> "3", "qty" -> 3),                     // null non-null name
+      Map("id" -> "4", "name" -> "d", "qty" -> 4)), allowPartialErrors = true)
+    def failedRows = rep.failed.collect().map(r => (r.getString(0), Option(r.getString(1))))
+      .sortBy(_._1).toSeq
+    val before = (rep.successCount, rep.failedCount, rep.successKeys, rep.failedKeys, failedRows)
+    assert(before == (2L, 2L, Seq("2", "4"), Seq("1", "3"),
+      Seq(("1", Some("dup")), ("3", None))), before.toString)
+    // swap the table's files out from under the report, twice
+    e.update("acc").set("name", "z").where("id", "=", "2").apply()
+    e.clear("acc")
+    assert((rep.successCount, rep.failedCount, rep.successKeys, rep.failedKeys, failedRows) ==
+      before)
+    assert(rep.failed.count() == 2)
   }
 }

@@ -9,7 +9,8 @@ linked by op id. This prints one markdown row per op name: how many ops,
 their median wall time, and the median number of jobs per op, split the way
 perfbench/metrics.py splits them: a job that starts inside the op's
 construct phase (1 ms slack) is a construct job, every other job an exec
-job.
+job. The last column counts, of those, the jobs that start inside the op's
+write phase (same slack): the Spark jobs of one facade write call.
 """
 import json
 import statistics
@@ -20,30 +21,34 @@ SLACK_MS = 1.0
 
 
 def main(path):
-    ops, construct, jobs = {}, defaultdict(list), defaultdict(list)
+    ops, phases, jobs = {}, defaultdict(list), defaultdict(list)
     with open(path) as f:
         for line in f:
             s = json.loads(line)
             if s["span"] == "op":
                 ops[s["op"]] = s
-            elif s["span"] == "phase" and s["name"] == "construct":
-                construct[s["op"]].append((s["start_ms"], s["end_ms"]))
+            elif s["span"] == "phase" and s["name"] in ("construct", "write"):
+                phases[s["op"], s["name"]].append((s["start_ms"], s["end_ms"]))
             elif s["span"] == "job":
                 jobs[s["op"]].append(s["start_ms"])
-    rows = defaultdict(lambda: ([], [], []))
+    rows = defaultdict(lambda: ([], [], [], []))
     for op, s in ops.items():
-        walls, cons, execs = rows[s["name"]]
-        n_cons = sum(any(a - SLACK_MS <= t <= b + SLACK_MS for a, b in construct[op])
-                     for t in jobs[op])
+        def inside(phase):
+            return sum(any(a - SLACK_MS <= t <= b + SLACK_MS for a, b in phases[op, phase])
+                       for t in jobs[op])
+        walls, cons, execs, writes = rows[s["name"]]
+        n_cons = inside("construct")
         walls.append(s["end_ms"] - s["start_ms"])
         cons.append(n_cons)
         execs.append(len(jobs[op]) - n_cons)
-    print("| op | ops | median wall ms | median construct jobs | median exec jobs |")
-    print("|---|---:|---:|---:|---:|")
+        writes.append(inside("write"))
+    print("| op | ops | median wall ms | median construct jobs | median exec jobs | median write jobs |")
+    print("|---|---:|---:|---:|---:|---:|")
     for name in sorted(rows):
-        walls, cons, execs = rows[name]
+        walls, cons, execs, writes = rows[name]
         print(f"| {name} | {len(walls)} | {statistics.median(walls):.1f} | "
-              f"{statistics.median(cons):g} | {statistics.median(execs):g} |")
+              f"{statistics.median(cons):g} | {statistics.median(execs):g} | "
+              f"{statistics.median(writes):g} |")
 
 
 if __name__ == "__main__":
