@@ -95,25 +95,31 @@ final class Graft(
   private def idScope(name: String): String =
     s"${warehouse.getOrElse(dataDir)}/${spaceOf(name)}/$name"
 
-  /** The stored directory of a managed table: current space, then global. */
-  private def managedDir(name: String): Option[String] = warehouse.flatMap(w =>
-    Seq(s"$w/$space/$name", s"$w/global/$name").find(p => Files.exists(Paths.get(p))))
-
-  private def managedExists(name: String): Boolean = managedDir(name).isDefined
+  private def managedExists(name: String): Boolean =
+    warehouse.exists { w =>
+      Files.exists(Paths.get(s"$w/$space/$name")) ||
+        Files.exists(Paths.get(s"$w/global/$name"))
+    }
 
   /** Read a table as a DataFrame. TTL tables get the reference's standing
     * expiry filter at scan time (table_schema.dart:1804-1885). */
   def table(name: String): DataFrame = {
-    val df = managedDir(name).map(graft.sources.ParquetNanos.read(spark, _)).getOrElse(
-      registry.get(space, name) match {
+    val df =
+      if (managedExists(name)) {
+        val w = warehouse.get
+        val local = s"$w/$space/$name"
+        val p = if (Files.exists(Paths.get(local))) local else s"$w/global/$name"
+        graft.sources.ParquetNanos.read(spark, p)
+      } else registry.get(space, name) match {
         // registered but never written: empty frame straight from the
         // declared schema (createTable defers the physical directory to
         // the first write — and a registered table must SHADOW a
         // same-named dataDir parquet, as the managed read above does)
         case Some(s) if warehouse.isDefined =>
-          spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row], s.sparkSchema)
+          spark.createDataFrame(
+            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s.sparkSchema)
         case _ => graft.sources.ParquetNanos.read(spark, s"$dataDir/$name.parquet")
-      })
+      }
     registry.get(space, name).flatMap(_.ttl) match {
       case Some(ttl) =>
         val src = ttl.sourceField.getOrElse(Graft.IngestTsCol)
@@ -229,6 +235,7 @@ final class Graft(
     // loose typing (FieldSchema.convertValue, table_schema.dart:1356-1446):
     // values are coerced to the declared column type before encoding
     import org.apache.spark.sql.types._
+    import org.apache.spark.unsafe.types.UTF8String
     def jvm(v: Any, t: DataType): Any = (v, t) match {
       case (null, _)                   => null
       case (x, StringType)             => x.toString
@@ -285,20 +292,15 @@ final class Graft(
     val stagingSchema = StructType(schema.fields.map(_.copy(nullable = true)) ++ Seq(
       StructField("__parse_ok", BooleanType, nullable = false),
       StructField("__row_idx", LongType, nullable = false)))
-    // Spark's key equality on the values `jvm` yields (any other value is
-    // one key: two of them never prove a set unique)
-    def keyOf(v: Any): Any = v match {
-      case s: String => org.apache.spark.unsafe.types.UTF8String.fromString(s)
-      case d: Double => d + 0.0 // -0.0 joins 0.0; NaN equals NaN
-      case t: java.sql.Timestamp =>
-        org.apache.spark.sql.catalyst.util.DateTimeUtils.fromJavaTimestamp(t)
-      case _: Long | _: Int | _: Boolean => v
-      case _ => ()
-    }
+    // all-string key sets whose non-NULL values never repeat in the batch
+    // (as UTF8String: Spark compares strings by their bytes); any other
+    // key set keeps the within-batch window
     val unique = registry.get(space, name).toSeq.flatMap(_.uniqueKeySets)
-      .filter(_.forall(schema.fieldNames.contains)).filter { ks =>
-        val keys = data.map(r => ks.map(k => r.get(schema.fieldIndex(k)))).filterNot(_.contains(null))
-        keys.map(_.map(keyOf)).distinct.size == keys.size
+      .filter(_.forall(k => schema.exists(f => f.name == k && f.dataType == StringType)))
+      .filter { ks =>
+        val keys = data.map(r => ks.map(k => r.getString(schema.fieldIndex(k))))
+          .filterNot(_.contains(null)).map(_.map(UTF8String.fromString))
+        keys.distinct.size == keys.size
       }.toSet
     (spark.createDataFrame(java.util.Arrays.asList(data: _*), stagingSchema), unique)
   }
@@ -315,22 +317,25 @@ final class Graft(
     graft.write.Writes.singleTableFlow(managedPath(name)) {
       import org.apache.spark.sql.functions.{col => c, row_number}
       val (good, report) = validateStaged(name, staged, mergeKey, provablyUnique)
-      if (!allowPartialErrors && report.failedCount > 0)
-        throw new IllegalArgumentException(s"${mergeKey.fold("batchInsert")(_ => "batchUpsert")}: " +
-          s"${report.failedCount} invalid row(s); pass allowPartialErrors to skip them")
+      if (!allowPartialErrors && report.failedCount > 0) {
+        val op = if (mergeKey.isEmpty) "batchInsert" else "batchUpsert"
+        throw new IllegalArgumentException(
+          s"$op: ${report.failedCount} invalid row(s); pass allowPartialErrors to skip them")
+      }
       // an all-rejected batch writes nothing — and must not publish a
       // phantom ChangeEvent to watchers
       if (report.successCount > 0) mergeKey match {
-        // one file per 10k rows: a small batch must not land one file per core
-        case None => graft.write.Writes.append(this, name, good.drop(Graft.Carriers: _*)
-          .coalesce(math.max(1, (report.successCount / 10000).toInt)))
+        case None => graft.write.Writes.append(this, name, good.drop(Graft.Carriers: _*))
         case Some(ks) =>
           // within-batch duplicate merge keys: the last occurrence wins
-          val deduped = if (provablyUnique.contains(ks)) good else good.withColumn("__rn",
-            row_number().over(org.apache.spark.sql.expressions.Window
-              .partitionBy(ks.map(c): _*).orderBy(c("__row_idx").desc))).where(c("__rn") === 1)
-          graft.write.Writes.overwrite(this, name, graft.write.Writes.upsertMerge(
-            table(name), deduped.drop("__rn" +: Graft.Carriers: _*), ks), op = "upsert")
+          val w = org.apache.spark.sql.expressions.Window
+            .partitionBy(ks.map(c): _*).orderBy(c("__row_idx").desc)
+          val deduped =
+            if (provablyUnique.contains(ks)) good
+            else good.withColumn("__rn", row_number().over(w)).where(c("__rn") === 1)
+          val merged = graft.write.Writes.upsertMerge(
+            table(name), deduped.drop("__rn" +: Graft.Carriers: _*), ks)
+          graft.write.Writes.overwrite(this, name, merged, op = "upsert")
       }
       if (mergeKey.isEmpty) report else report.copy(successKeys = Nil, failedKeys = Nil)
     }
@@ -430,19 +435,19 @@ final class Graft(
     }
     val pinned = rows.fold(flagged.localCheckpoint(true))(rs =>
       spark.createDataFrame(java.util.Arrays.asList(rs: _*), flagged.schema))
-    def split(ok: Boolean): (Long, Seq[String]) = rows match {
-      case Some(rs) =>
-        val mine = rs.filter(_.getAs[Boolean]("__ok") == ok)
-        (mine.length, mine.take(cap).map(_.getAs[String]("__key")).toSeq)
-      case None =>
-        val part = pinned.where(c("__ok") === ok)
-        val keys = part.select("__key").limit(cap).collect().map(_.getString(0)).toSeq
-        (if (keys.size < cap) keys.size else part.count(), keys) // under the cap: exact
+    // over a LocalRelation the filter/limit/collect fold on the driver (no job)
+    def split(ok: Boolean): (Long, Seq[String]) = {
+      val part = pinned.where(c("__ok") === ok)
+      val keys = part.select("__key").limit(cap).collect().map(_.getString(0)).toSeq
+      (if (keys.size < cap) keys.size else part.count(), keys) // under the cap: exact
     }
     val ((goodCount, goodKeys), (failedCount, failedKeys)) = (split(true), split(false))
-    (pinned.where(c("__ok")).drop("__ok", "__key"), graft.write.WriteReport(goodCount,
-      failedCount, pinned.where(!c("__ok")).drop("__ok" +: "__key" +: Graft.Carriers: _*),
-      if (pk.isDefined) goodKeys else Nil, if (pk.isDefined) failedKeys else Nil))
+    val kept = pinned.where(c("__ok")).drop("__ok", "__key")
+    // a driver-held batch writes one file per 10k rows, not one per core
+    (rows.fold(kept)(_ => kept.coalesce(math.max(1, (goodCount / 10000).toInt))),
+      graft.write.WriteReport(goodCount, failedCount,
+        pinned.where(!c("__ok")).drop("__ok" +: "__key" +: Graft.Carriers: _*),
+        if (pk.isDefined) goodKeys else Nil, if (pk.isDefined) failedKeys else Nil))
   }
 
   /**

@@ -54,23 +54,25 @@ object Writes {
       sets: Seq[(String, UExpr)],
       cond: Cond,
       allowUpdateAll: Boolean = false): DataFrame = {
-    val pred = guarded(df, cond, allowUpdateAll,
-      "condition-less update requires allowUpdateAll (update_builder.dart:215-219)")
+    if (cond == Cond.True && !allowUpdateAll)
+      throw new IllegalArgumentException(
+        "condition-less update requires allowUpdateAll (update_builder.dart:215-219)")
+    val types = df.schema.fields.map(f => f.name -> f.dataType).toMap
+    val pred = cond.toColumn(col, types.get)
     sets.foldLeft(df) { case (acc, (f, e)) =>
-      val newVal = e.toColumn(col, lit(true)).cast(df.schema(f).dataType)
+      val newVal = e.toColumn(col, lit(true)).cast(types(f))
       acc.withColumn(f, when(pred, newVal).otherwise(col(f)))
     }
   }
 
   /** delete(table).where(cond) → anti-filter. */
-  def deletePreview(df: DataFrame, cond: Cond, allowDeleteAll: Boolean = false): DataFrame =
-    df.where(!coalesce(guarded(df, cond, allowDeleteAll,
-      "condition-less delete requires allowDeleteAll (delete_builder.dart:4-39)"), lit(false)))
-
-  /** `cond` over `df`'s columns; a condition-less write needs `allowAll`. */
-  private def guarded(df: DataFrame, cond: Cond, allowAll: Boolean, refusal: String): Column = {
-    if (cond == Cond.True && !allowAll) throw new IllegalArgumentException(refusal)
-    cond.toColumn(col, df.schema.fields.map(f => f.name -> f.dataType).toMap.get)
+  def deletePreview(df: DataFrame, cond: Cond, allowDeleteAll: Boolean = false): DataFrame = {
+    if (cond == Cond.True && !allowDeleteAll)
+      throw new IllegalArgumentException(
+        "condition-less delete requires allowDeleteAll (delete_builder.dart:4-39)")
+    val types = df.schema.fields.map(f => f.name -> f.dataType).toMap
+    val pred = cond.toColumn(col, types.get)
+    df.where(!coalesce(pred, lit(false)))
   }
 
   /**

@@ -326,4 +326,18 @@ class WritesSpec extends SparkSpec {
       before)
     assert(rep.failed.count() == 2)
   }
+
+  test("a within-batch duplicate on a non-string unique key is rejected") {
+    import graft.schema._
+    val e = Graft.withWarehouse(spark, sfDir,
+      Files.createTempDirectory("graft_numkey").toString)
+    e.createTable(TableSchema("m", PrimaryKeyConfig("id", PkStrategy.None),
+      Seq(FieldSchema("score", GType.GDouble, unique = true))))
+    // Spark's key equality: -0.0 is 0.0, NaN is NaN
+    val r = e.batchInsert("m", Seq(Map("id" -> "a", "score" -> 0.0),
+      Map("id" -> "b", "score" -> -0.0), Map("id" -> "c", "score" -> Double.NaN),
+      Map("id" -> "d", "score" -> Double.NaN)), allowPartialErrors = true)
+    assert(r.failedKeys == Seq("b", "d"))
+    assert(e.table("m").collect().map(_.getString(0)).sorted.toSeq == Seq("a", "c"))
+  }
 }
