@@ -1272,15 +1272,16 @@ object Graft {
       .config("spark.sql.adaptive.enabled", "true")
       // codegen class cache: the default 100 entries thrashes under a
       // 405-query suite (every query recompiles its generated code each
-      // pass — janino compilation, not query work); any production
-      // deployment with a diverse query mix raises this the same way.
-      // Static conf: must be set at FIRST session build.
+      // pass — janino compilation, not query work). CodeGenerator reads
+      // this once, when it loads, which may be before this build:
+      // CodegenCache.ensure below makes the size take effect.
       .config("spark.sql.codegen.cache.maxEntries", "8192")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    graft.plans.CodegenCache.ensure(s.conf.get("spark.sql.codegen.cache.maxEntries").toLong)
     s
   }
 }

@@ -76,5 +76,6 @@ object GraftExtensions {
     ext.injectOptimizerRule(_ => NanosPredicatePushdown)
     ext.injectOptimizerRule(_ => MvAggregateRewrite)
     ext.injectPlannerStrategy(_ => TopKStrategy)
+    ext.injectColumnar(_ => BindLiterals)
   }
 }

@@ -1,7 +1,6 @@
 package graft.query
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DataType
 
@@ -335,15 +334,10 @@ final case class QueryBuilder(
           case (0, None)    => sorted
           case (0, Some(n)) => sorted.limit(n)
           case (o, maybeN)  =>
-            // Scale-safe offset: TakeOrdered bounds the set to offset+limit
-            // (≤ maxQueryOffset + limit rows) BEFORE the single-partition
-            // row_number window — the window never sees more than ~11k rows.
+            // Scale-safe offset: one TakeOrderedAndProject(limit = o + n,
+            // offset = o) keeps at most maxQueryOffset + limit rows.
             require(sortCols.nonEmpty, "offset requires an explicit orderBy")
-            val n = maybeN.getOrElse(engine.defaultQueryLimit)
-            val bounded = sorted.limit(o + n)
-            val w = Window.orderBy(sortCols: _*)
-            bounded.withColumn("__rn", row_number().over(w))
-              .where(col("__rn") > o).drop("__rn")
+            sorted.limit(o + maybeN.getOrElse(engine.defaultQueryLimit)).offset(o)
         }
       }
 

@@ -41,6 +41,13 @@ class PlanShapeSpec extends SparkSpec {
     assert(bad.isEmpty, bad.mkString("; "))
   }
 
+  test("paged QueryBuilder read: offset without an unpartitioned window") {
+    val paged = engine.query("lineitem").orderByAsc("l_orderkey", "l_linenumber")
+      .limit(10).offset(20).toDF
+    val bad = offenders(paged, allowScalarBnl = false)
+    assert(bad.isEmpty, bad.mkString("; "))
+  }
+
   test("phraseSearch plan: no cartesian, no BNL, no unpartitioned window") {
     val docs = Seq((1L, "the cat sat on the mat"), (2L, "cat sat alone"))
       .toDF("doc_id", "text")

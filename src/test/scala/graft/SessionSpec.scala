@@ -15,6 +15,8 @@ class SessionSpec extends SparkSpec {
     assert(conf.get("spark.sql.shuffle.partitions") == "4") // TestSpark: cores = 4
     assert(spark.sparkContext.master == "local[4]")
     assert(conf.get("spark.sql.codegen.cache.maxEntries") == "8192")
+    // the live JVM-wide class cache holds as many, whenever CodeGenerator loaded
+    assert(graft.plans.CodegenCache.capacity >= conf.get("spark.sql.codegen.cache.maxEntries").toLong)
     assert(conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
     assert(conf.get("spark.sql.session.timeZone") == "UTC")
     assert(spark.sparkContext.getConf.get("spark.ui.enabled") == "false")
