@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.catalog.SchemaRegistry
@@ -95,22 +93,25 @@ final class Graft(
   private def idScope(name: String): String =
     s"${warehouse.getOrElse(dataDir)}/${spaceOf(name)}/$name"
 
-  private def managedExists(name: String): Boolean =
-    warehouse.exists { w =>
-      Files.exists(Paths.get(s"$w/$space/$name")) ||
-        Files.exists(Paths.get(s"$w/global/$name"))
-    }
+  /** Whether `path` exists, asked of Hadoop FS: a warehouse named as a URI
+    * (`file://`, `hdfs://`, `s3a://`) resolves like a bare local path. */
+  private[graft] def pathExists(path: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+  }
+
+  /** Where a managed table's data lives: the current space's directory,
+    * else global's; None without a warehouse or before the first write. */
+  private def managedData(name: String): Option[String] =
+    warehouse.toSeq.flatMap(w => Seq(s"$w/$space/$name", s"$w/global/$name"))
+      .find(pathExists)
 
   /** Read a table as a DataFrame. TTL tables get the reference's standing
     * expiry filter at scan time (table_schema.dart:1804-1885). */
   def table(name: String): DataFrame = {
-    val df =
-      if (managedExists(name)) {
-        val w = warehouse.get
-        val local = s"$w/$space/$name"
-        val p = if (Files.exists(Paths.get(local))) local else s"$w/global/$name"
-        graft.sources.ParquetNanos.read(spark, p)
-      } else registry.get(space, name) match {
+    val df = managedData(name) match {
+      case Some(p) => graft.sources.ParquetNanos.read(spark, p)
+      case None => registry.get(space, name) match {
         // registered but never written: empty frame straight from the
         // declared schema (createTable defers the physical directory to
         // the first write — and a registered table must SHADOW a
@@ -120,6 +121,7 @@ final class Graft(
             spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s.sparkSchema)
         case _ => graft.sources.ParquetNanos.read(spark, s"$dataDir/$name.parquet")
       }
+    }
     registry.get(space, name).flatMap(_.ttl) match {
       case Some(ttl) =>
         val src = ttl.sourceField.getOrElse(Graft.IngestTsCol)
@@ -160,9 +162,10 @@ final class Graft(
   }
 
   private def dataDirTables: Seq[String] = {
-    val d = new java.io.File(dataDir)
-    if (!d.isDirectory) Nil
-    else d.listFiles().toSeq.map(_.getName)
+    val d = new org.apache.hadoop.fs.Path(dataDir)
+    val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(d)) Nil
+    else fs.listStatus(d).toSeq.map(_.getPath.getName)
       .filter(_.endsWith(".parquet")).map(_.stripSuffix(".parquet"))
   }
 
@@ -218,7 +221,7 @@ final class Graft(
   /** The base generated PKs continue from: the stored max of a sequential
     * PK, 0 for other strategies or a never-written table. */
   private def pkBase(name: String, pk: graft.schema.PrimaryKeyConfig): Long =
-    if (pk.strategy == graft.schema.PkStrategy.Sequential && managedExists(name)) {
+    if (pk.strategy == graft.schema.PkStrategy.Sequential && managedData(name).isDefined) {
       import org.apache.spark.sql.functions.{col, max}
       Option(table(name).agg(max(col(pk.name).cast("long"))).head.get(0))
         .map(_.asInstanceOf[Long]).getOrElse(0L)
@@ -385,7 +388,7 @@ final class Graft(
     // ONE read of the stored key columns (as `__ex_*`) serves every stored-
     // key join, one reused broadcast; an empty table needs no probe job
     val exCols = (mk ++ keySets.flatten).distinct
-    val stored = Some(exCols).filter(_.nonEmpty && managedExists(name)).map(ks =>
+    val stored = Some(exCols).filter(_.nonEmpty && managedData(name).isDefined).map(ks =>
       table(name).select(ks.map(c): _*).toDF(ks.map("__ex_" + _): _*))
     def storedOn(ks: Seq[String]) = ks.map(k => c(k) === c("__ex_" + k)).reduce(_ && _)
     // upsert rows whose merge key is stored are updates: no nullability
@@ -774,9 +777,13 @@ final class Graft(
     graft.write.Writes.overwrite(this, b.table, migrateSelect(renamed, target),
       op = "migrate")
     if (finalName != b.table) {
+      // a failed move throws before the registry follows the new name, so
+      // schema and data never part
       warehouse.foreach { w =>
         val from = new org.apache.hadoop.fs.Path(s"$w/$sp/${b.table}")
-        if (fs.exists(from)) fs.rename(from, new org.apache.hadoop.fs.Path(s"$w/$sp/$finalName"))
+        val to = new org.apache.hadoop.fs.Path(s"$w/$sp/$finalName")
+        if (fs.exists(from) && !fs.rename(from, to))
+          throw new java.io.IOException(s"updateSchema: cannot move $from to $to")
       }
       // the sequence moves with the data: a same-second insert after the
       // rename must not reserve an already-used id block
@@ -1027,8 +1034,8 @@ final class Graft(
   /** Whether a table is resolvable: registered schema, managed data, or a
     * dataDir parquet (tostore.dart:944). */
   def tableExists(name: String): Boolean =
-    registry.get(space, name).isDefined || managedExists(name) ||
-      Files.exists(Paths.get(s"$dataDir/$name.parquet"))
+    registry.get(space, name).isDefined || managedData(name).isDefined ||
+      pathExists(s"$dataDir/$name.parquet")
 
   /** Declared schema of a table, if registered (tostore.dart:956). */
   def getTableSchema(name: String): Option[TableSchema] = registry.get(space, name)
@@ -1037,9 +1044,7 @@ final class Graft(
     * lib/src/model/table_info.dart). Counting is a Spark job — at scale
     * call sparingly or on pruned tables. */
   def getTableInfo(name: String): Graft.TableInfo = {
-    val bytes = warehouse.map(_ => managedPath(name)).filter(p => Files.exists(Paths.get(p)))
-      .orElse(Some(s"$dataDir/$name.parquet").filter(p => Files.exists(Paths.get(p))))
-      .map(dirSize).getOrElse(0L)
+    val bytes = dirSize(managedData(name).getOrElse(s"$dataDir/$name.parquet"))
     Graft.TableInfo(name, table(name).count(), bytes, registry.get(space, name))
   }
 

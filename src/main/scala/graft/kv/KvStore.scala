@@ -72,20 +72,12 @@ final class KvStore(
     StructField("value", StringType, nullable = true),
     StructField("expires_at", TimestampType, nullable = true)))
 
-  private def path: String = {
-    val w = engine.warehouse.getOrElse(
-      throw new IllegalStateException("KV store requires a warehouse directory"))
-    val sp = if (global) "global" else engine.space
-    s"$w/$sp/$tableName"
-  }
-
-  private def exists: Boolean =
-    java.nio.file.Files.exists(java.nio.file.Paths.get(path))
+  private def path: String = engine.managedPath(tableName, global)
 
   /** Live view: expired entries filtered out (lazy expiry). */
   def df: DataFrame = {
     val raw =
-      if (exists) spark.read.schema(schema).parquet(path)
+      if (engine.pathExists(path)) spark.read.schema(schema).parquet(path)
       else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
     raw.where(col("expires_at").isNull || col("expires_at") > current_timestamp())
   }
@@ -127,20 +119,14 @@ final class KvStore(
   /** Drop expired rows physically (the background sweeper's job). */
   def compact(): Unit = writeAtomic(df)
 
-  /** Parquet files per KV rewrite. 1 is right for config/metadata-grain
-    * namespaces (point reads stay one-footer cheap); raise for a huge KV
-    * namespace so the rewrite parallelizes — the swap stays atomic either
-    * way. */
-  var targetFiles: Int = 1
-
   private def writeAtomic(data: => DataFrame): Unit =
-    // stage → swap with .old backup under the single-table flow lock and
-    // the cross-process lease, as every managed overwrite: a crash never
-    // leaves the store missing, crashed-writer debris self-heals, and the
-    // BY-NAME merge plan lists the store INSIDE the critical section, so
-    // a concurrent swap cannot lose one writer's keys
+    // the one locked swap every managed overwrite takes: one parquet file
+    // (point reads stay one-footer cheap), crash recovery and debris
+    // healing under the lease, and the BY-NAME merge plan lists the store
+    // INSIDE the critical section, so a concurrent swap cannot lose one
+    // writer's keys
     graft.write.Writes.lockedSwap(spark.sparkContext.hadoopConfiguration, path)(tmp =>
-      data.coalesce(math.max(1, targetFiles)).write.mode(SaveMode.Overwrite).parquet(tmp))
+      data.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp))
 
   // ---------- reads ----------
 

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.write.Writes
+
 /**
  * Scale patterns for the 100 TB deployment — the shuffle-shaping utilities
  * a 1000-executor job needs. Nothing here exists in the reference (it is
@@ -62,23 +64,6 @@ object Scale {
    * `shuffle.partitions` shards. The layout an IVF index or a per-tenant
    * table wants.
    */
-  /** Staging-dir + atomic swap so the target can be the same path the
-    * input DataFrame reads from (compaction's normal case): Spark refuses
-    * a direct overwrite-while-reading, and partial failures must never
-    * destroy the existing table. */
-  private def atomicSwap(path: String, write: String => Unit,
-      conf: org.apache.hadoop.conf.Configuration): Unit = {
-    val tmp = path + ".staging"
-    write(tmp)
-    val dst = new org.apache.hadoop.fs.Path(path)
-    val fs = dst.getFileSystem(conf)
-    val bak = new org.apache.hadoop.fs.Path(path + ".old")
-    if (fs.exists(bak)) fs.delete(bak, true)
-    if (fs.exists(dst)) fs.rename(dst, bak)
-    fs.rename(new org.apache.hadoop.fs.Path(tmp), dst)
-    fs.delete(bak, true)
-  }
-
   def writeClustered(
       df: DataFrame,
       path: String,
@@ -96,19 +81,22 @@ object Scale {
       if (filesPerPartition == 1) df.repartition(col(partitionCol))
       else df.repartition(col(partitionCol),
         pmod(xxhash64(struct(df.columns.map(col): _*)), lit(filesPerPartition)))
-    atomicSwap(path, tmp =>
+    Writes.lockedSwap(df.sparkSession.sparkContext.hadoopConfiguration, path)(tmp =>
       repartitioned
-        .write.partitionBy(partitionCol).mode("overwrite").parquet(tmp),
-      df.sparkSession.sparkContext.hadoopConfiguration)
+        .write.partitionBy(partitionCol).mode("overwrite").parquet(tmp))
   }
 
   /** Compact small files: coalesce to ~`targetBytes` outputs based on the
-    * current size — the maintenance job every long-lived table needs. */
+    * current size — the maintenance job every long-lived table needs.
+    * Like every layout writer here it publishes through
+    * `Writes.lockedSwap`, so `path` may be the one `df` reads (Spark
+    * refuses a direct overwrite-while-reading) and a failed write leaves
+    * the existing table intact. */
   def compactFiles(df: DataFrame, path: String, targetFileBytes: Long = 256L << 20): Unit = {
     val sizeEstimate = df.queryExecution.optimizedPlan.stats.sizeInBytes
     val n = math.max(1, (sizeEstimate / BigInt(targetFileBytes)).toInt)
-    atomicSwap(path, tmp => df.coalesce(n).write.mode("overwrite").parquet(tmp),
-      df.sparkSession.sparkContext.hadoopConfiguration)
+    Writes.lockedSwap(df.sparkSession.sparkContext.hadoopConfiguration, path)(tmp =>
+      df.coalesce(n).write.mode("overwrite").parquet(tmp))
   }
 
   /**
@@ -136,11 +124,10 @@ object Scale {
     * the sort key then prune range predicates file-level). */
   def writeSorted(df: DataFrame, path: String, sortCols: Seq[String],
       partitions: Int = 32): Unit =
-    atomicSwap(path, tmp =>
+    Writes.lockedSwap(df.sparkSession.sparkContext.hadoopConfiguration, path)(tmp =>
       df.repartitionByRange(partitions, sortCols.map(col): _*)
         .sortWithinPartitions(sortCols.map(col): _*)
-        .write.mode("overwrite").parquet(tmp),
-      df.sparkSession.sparkContext.hadoopConfiguration)
+        .write.mode("overwrite").parquet(tmp))
 
   /**
    * Z-order (Morton) key over numeric columns: each value is min-max
@@ -189,12 +176,11 @@ object Scale {
        Option(head.get(2 * i + 1)).fold(0.0)(_.asInstanceOf[Double]))
     }
     val z = zOrderKey(zCols.map(col), bounds, bits).as("__z")
-    atomicSwap(path, tmp =>
+    Writes.lockedSwap(df.sparkSession.sparkContext.hadoopConfiguration, path)(tmp =>
       df.withColumn("__z", z)
         .repartitionByRange(partitions, col("__z"))
         .sortWithinPartitions(col("__z"))
         .drop("__z")
-        .write.mode("overwrite").parquet(tmp),
-      df.sparkSession.sparkContext.hadoopConfiguration)
+        .write.mode("overwrite").parquet(tmp))
   }
 }

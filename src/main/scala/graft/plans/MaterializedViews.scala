@@ -182,38 +182,21 @@ object MaterializedViews {
   /**
    * STREAMING maintenance: keep the summary at `mvPath` current against a
    * stream of CDC rows ([[cdcFeed]] schema) — `foreachBatch` applies
-   * [[applyCdc]] per micro-batch and republishes the summary with an
-   * atomic directory swap (write staging → rename aside → rename in), so
-   * readers never observe a partial summary. The summary is |groups|-
-   * sized; each batch costs |batch| + |summary|, never a base scan —
-   * the streaming complement of [[refreshIncremental]] (q142's batch
-   * shape). Caller starts/awaits the returned writer.
+   * [[applyCdc]] per micro-batch and republishes the summary through
+   * `Writes.lockedSwap`, so readers never observe a partial summary. The
+   * summary is |groups|-sized; each batch costs |batch| + |summary|, never
+   * a base scan — the streaming complement of [[refreshIncremental]]
+   * (q142's batch shape). Caller starts/awaits the returned writer.
    */
   def maintainStream(cdcStream: DataFrame, mvPath: String, dims: Seq[String],
       sumCols: Seq[String]): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     cdcStream.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
       val spark = batch.sparkSession
-      val next = applyCdc(TableResolver.open(spark, mvPath), batch, dims, sumCols)
-      swapPublish(next, mvPath)
+      // the summary is read inside the swap, after its recovery step
+      graft.write.Writes.lockedSwap(spark.sparkContext.hadoopConfiguration, mvPath)(tmp =>
+        applyCdc(TableResolver.open(spark, mvPath), batch, dims, sumCols)
+          .coalesce(1).write.mode("overwrite").parquet(tmp))
     }
-
-  /** Atomic republish of a small summary directory. */
-  private def swapPublish(df: DataFrame, path: String): Unit = {
-    val conf = df.sparkSession.sparkContext.hadoopConfiguration
-    val dst = new org.apache.hadoop.fs.Path(path)
-    val fs = dst.getFileSystem(conf)
-    val tmp = new org.apache.hadoop.fs.Path(path + ".staging")
-    val bak = new org.apache.hadoop.fs.Path(path + ".old")
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    try df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    catch { case e: Throwable => fs.delete(tmp, true); throw e }
-    if (fs.exists(bak)) fs.delete(bak, true)
-    if (fs.exists(dst)) { if (!fs.rename(dst, bak))
-      throw new java.io.IOException(s"mv swap: cannot move $dst aside") }
-    if (!fs.rename(tmp, dst))
-      throw new java.io.IOException(s"mv swap: cannot publish $tmp")
-    fs.delete(bak, true): Unit
-  }
 }
 
 /** The optimizer rule. Idempotent: a rewritten Aggregate scans the

@@ -211,12 +211,9 @@ object GraphAnn {
     * keeps the prior serving index; same discipline as every managed
     * write). Layout is `partitionBy(__shard)` so a serving process reads
     * shard-clustered files. */
-  def graphSave(graph: DataFrame, path: String): Unit = {
-    val conf = graph.sparkSession.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(conf)
-    graft.write.Writes.stagedSwap(fs, path)(tmp =>
-      graph.write.partitionBy("__shard").parquet(tmp))
-  }
+  def graphSave(graph: DataFrame, path: String): Unit =
+    graft.write.Writes.lockedSwap(graph.sparkSession.sparkContext.hadoopConfiguration, path)(
+      tmp => graph.write.partitionBy("__shard").parquet(tmp))
 
   /** Load a persisted graph for serving. Pass the result through
     * `graphSearchBatch` with `assumeColocated = false` (default): parquet

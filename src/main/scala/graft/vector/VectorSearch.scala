@@ -363,36 +363,17 @@ object VectorSearch {
     * tiny): a serving job `ivfLoad`s the model instead of retraining, the
     * missing piece between "train once" and "probe forever" (the
     * reference persists its ANN graph the same way,
-    * vector_index_manager.dart index files). */
+    * vector_index_manager.dart index files). Saves publish through
+    * `Writes.lockedSwap`, not a bare `mode(Overwrite)` that deletes the
+    * serving model before the new one is durable: a crashed save keeps the
+    * prior model and a concurrent load never sees a partial directory. */
   def ivfSave(model: IvfModel, spark: org.apache.spark.sql.SparkSession,
       path: String): Unit = {
     import spark.implicits._
-    stagedModelWrite(model.centroids.toSeq.zipWithIndex
-      .map { case (c, i) => (i, c.toSeq, model.metric) }
-      .toDF("cell", "centroid", "metric"), path)
-  }
-
-  /** Staged write + swap for persisted model artifacts — the Writes
-    * discipline, not a bare overwrite: Spark's `mode(Overwrite)` deletes
-    * the old directory BEFORE the new one is durable, so a crashed save
-    * would destroy the previously-serving model and a concurrent load
-    * could observe a partial directory. Here the old model stays intact
-    * until the staged copy is complete, then one rename swaps it in. */
-  private def stagedModelWrite(df: DataFrame, path: String): Unit = {
-    val conf = df.sparkSession.sparkContext.hadoopConfiguration
-    val dst = new org.apache.hadoop.fs.Path(path)
-    val fs = dst.getFileSystem(conf)
-    val tmp = new org.apache.hadoop.fs.Path(path + ".staging")
-    val bak = new org.apache.hadoop.fs.Path(path + ".old")
-    if (fs.exists(tmp)) fs.delete(tmp, true) // crashed-save debris
-    try df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    catch { case e: Throwable => fs.delete(tmp, true); throw e }
-    if (fs.exists(bak)) fs.delete(bak, true)
-    if (fs.exists(dst)) { if (!fs.rename(dst, bak))
-      throw new java.io.IOException(s"model swap: cannot move $dst aside") }
-    if (!fs.rename(tmp, dst))
-      throw new java.io.IOException(s"model swap: cannot publish $tmp")
-    fs.delete(bak, true): Unit
+    graft.write.Writes.lockedSwap(spark.sparkContext.hadoopConfiguration, path)(tmp =>
+      model.centroids.toSeq.zipWithIndex
+        .map { case (c, i) => (i, c.toSeq, model.metric) }
+        .toDF("cell", "centroid", "metric").coalesce(1).write.mode("overwrite").parquet(tmp))
   }
 
   /** Load a persisted IVF model (exact centroid doubles round-trip). */
@@ -736,7 +717,9 @@ object VectorSearch {
       s <- model.codebooks.indices
       j <- model.codebooks(s).indices
     } yield (s, j, model.codebooks(s)(j).toSeq, model.dim)
-    stagedModelWrite(rows.toDF("subspace", "centroid", "values", "dim"), path)
+    graft.write.Writes.lockedSwap(spark.sparkContext.hadoopConfiguration, path)(tmp =>
+      rows.toDF("subspace", "centroid", "values", "dim")
+        .coalesce(1).write.mode("overwrite").parquet(tmp))
   }
 
   /** Load a persisted PQ model (exact codebook doubles round-trip). */

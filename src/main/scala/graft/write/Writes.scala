@@ -209,26 +209,46 @@ object Writes {
   /** Runs `body` holding the cross-process [[WriteLease]] for `path` —
     * the one place a write acquires it. Lease timings are read per call
     * (system properties `graft.write.lease.{staleMs,waitMs,pollMs}`) so
-    * tests and operators tune them without restarts. */
+    * tests and operators tune them without restarts. Under the lease, and
+    * before `body` runs, a directory a crashed swap left only at
+    * `<path>.old` is renamed back, so the write reads and extends the
+    * table rather than starting over without it. */
   private def leased[A](fs: FileSystem, path: String)(body: => A): A = {
     def prop(k: String, d: Long) =
       sys.props.get(s"graft.write.lease.$k").map(_.toLong).getOrElse(d)
     val lease = WriteLease.acquire(fs, path,
       prop("staleMs", 60000L), prop("waitMs", 30000L), prop("pollMs", 100L))
-    try body finally lease.close()
+    try {
+      val dst = new Path(path)
+      val bak = new Path(path + ".old")
+      if (!fs.exists(dst) && fs.exists(bak) && !fs.rename(bak, dst))
+        throw new java.io.IOException(s"cannot restore $bak to $dst")
+      body
+    } finally lease.close()
   }
 
-  /** The ONE stage→swap primitive, now lease-guarded: acquires the
-    * cross-process [[WriteLease]] for `path` (second PROCESS waits up to
-    * waitMs, then fails predictably — never a corrupt swap; see the
-    * lease's consistency contract), self-heals crashed-writer staging
-    * debris (safe: no live lease-respecting writer can exist under our
-    * lease — this replaces the old fail-loud probe, whose manual
-    * remediation the lease makes unnecessary), runs `writeStaging` into
-    * the staging dir, and swaps with a `.old` backup so a crash between
-    * renames never leaves the table missing. JVM-internal serialization
-    * (flow lock + path stripe) is the CALLER's job — the lease alone
-    * would let two threads of one process interleave list-then-swap. */
+  /** The ONE stage→swap primitive: every directory graft replaces (managed
+    * tables, the KV store, materialized-view summaries, persisted models,
+    * clustered/sorted/compacted layouts) is published here. Under the
+    * cross-process [[WriteLease]] for `path` (a second PROCESS waits up to
+    * waitMs, then fails predictably) it runs one recovery rule:
+    *  1. table missing and `<path>.old` present (a crash between the two
+    *     renames below): rename `.old` back, before `writeStaging` — and
+    *     so any by-name snapshot read inside it — runs;
+    *  2. delete crashed-writer `.staging` debris (safe: no live
+    *     lease-respecting writer exists under our lease), then run
+    *     `writeStaging` into `<path>.staging`, deleting it if that fails;
+    *  3. move the table aside to `.old`; if the rename fails, delete the
+    *     staging dir and throw, the table untouched;
+    *  4. rename staging to `path`; if that fails, move `.old` back, delete
+    *     the staging dir and throw;
+    *  5. delete `.old`.
+    * Every rename result is checked: Hadoop's rename of a directory onto an
+    * existing one moves it INSIDE, so an unchecked failed step 3 would nest
+    * the new rows in the old table and report success. A crash at any step
+    * leaves the table at `path` or `.old`, and the next leased write of
+    * `path` restores it. JVM-internal serialization (flow lock + path
+    * stripe) is the CALLER's job — see [[lockedSwap]]. */
   private[graft] def stagedSwap(fs: FileSystem,
       path: String)(writeStaging: String => Unit): Unit = leased(fs, path) {
     val tmp = path + ".staging"
@@ -238,21 +258,32 @@ object Writes {
         "(safe under the held write lease)")
       fs.delete(tmpPath, true)
     }
-    // a FAILED staging write (plan error, bad cast) must not leave
-    // debris either — we hold the lease, so deleting it is always safe
     try writeStaging(tmp)
     catch { case e: Throwable => fs.delete(tmpPath, true); throw e }
     val dst = new Path(path)
     val bak = new Path(path + ".old")
-    if (fs.exists(bak)) fs.delete(bak, true)
-    if (fs.exists(dst)) fs.rename(dst, bak)
-    fs.rename(tmpPath, dst)
+    def fail(msg: String): Nothing = {
+      fs.delete(tmpPath, true)
+      throw new java.io.IOException(msg)
+    }
+    val hadTable = fs.exists(dst)
+    if (hadTable) {
+      // the table is present, so a `.old` here is a finished swap's backup
+      if (fs.exists(bak)) fs.delete(bak, true)
+      if (!fs.rename(dst, bak)) fail(s"cannot move $dst aside to $bak")
+    }
+    if (!fs.rename(tmpPath, dst)) {
+      if (hadTable && !fs.rename(bak, dst))
+        fail(s"cannot publish $tmp, nor restore $bak (the next write of $dst restores it)")
+      fail(s"cannot publish $tmp to $dst")
+    }
     fs.delete(bak, true): Unit
   }
 
   /** The one locked swap: stage→swap `path` (see [[stagedSwap]]) under
-    * its single-table flow lock — every managed overwrite and the KV
-    * store's rewrite. */
+    * its single-table flow lock — every managed overwrite, the KV store's
+    * rewrite, and the operator-level publishes (view summaries, models,
+    * layouts). */
   private[graft] def lockedSwap(conf: org.apache.hadoop.conf.Configuration,
       path: String)(writeStaging: String => Unit): Unit =
     singleTableFlow(path)(stagedSwap(new Path(path).getFileSystem(conf), path)(writeStaging))

@@ -174,6 +174,8 @@ class MaterializedViewSpec extends SparkSpec {
         ((r.getAs[Double]("mv_sum_v"), r.getAs[Long]("mv_cnt")))).toMap
     // v1 rebuild: x = {id1: 5.0}, y = {id3: 1.0} (id2 deleted)
     assert(got == Map("x" -> ((5.0, 1L)), "y" -> ((1.0, 1L))))
+    assert(Seq(".staging", ".lock", ".old").forall(s => !java.nio.file.Files.exists(
+      java.nio.file.Paths.get(mvPath + s))), "swap debris beside mvPath")
   }
 
   test("non-matching shapes fall through: unknown dim, distinct agg, filters") {

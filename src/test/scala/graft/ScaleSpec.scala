@@ -89,6 +89,8 @@ class ScaleSpec extends SparkSpec {
   test("writeSorted: range-partitioned files carry min/max for pruning") {
     val dir = java.nio.file.Files.createTempDirectory("graft_sorted").toString + "/t"
     Scale.writeSorted(engine.table("lineitem"), dir, Seq("l_orderkey"), partitions = 4)
+    assert(Seq(".staging", ".lock", ".old").forall(s => !java.nio.file.Files.exists(
+      java.nio.file.Paths.get(dir + s))), "swap debris beside dir")
     val back = spark.read.parquet(dir)
     assert(back.count() == engine.table("lineitem").count())
     val filtered = back.where(col("l_orderkey") === 1L)

@@ -149,6 +149,8 @@ class VectorSearchSpec extends SparkSpec {
     val model = VectorSearch.ivfTrain(embs, "embedding", nlist = 8)
     val path = java.nio.file.Files.createTempDirectory("graft_ivf_model").toString + "/m"
     VectorSearch.ivfSave(model, spark, path)
+    assert(Seq(".staging", ".lock", ".old").forall(s => !java.nio.file.Files.exists(
+      java.nio.file.Paths.get(path + s))), "swap debris beside path")
     val loaded = VectorSearch.ivfLoad(spark, path)
     assert(loaded.metric == model.metric)
     assert(loaded.centroids.length == model.centroids.length)
@@ -290,6 +292,8 @@ class VectorSearchSpec extends SparkSpec {
     val model = VectorSearch.pqTrain(embs, "embedding", m = 8, k = 16)
     val path = java.nio.file.Files.createTempDirectory("graft_pq_model").toString + "/m"
     VectorSearch.pqSave(model, spark, path)
+    assert(Seq(".staging", ".lock", ".old").forall(s => !java.nio.file.Files.exists(
+      java.nio.file.Paths.get(path + s))), "swap debris beside path")
     val loaded = VectorSearch.pqLoad(spark, path)
     assert(loaded.m == model.m && loaded.k == model.k && loaded.dim == model.dim)
     // exact double round-trip → bit-identical codebooks
